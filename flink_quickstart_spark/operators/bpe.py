@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from flink_quickstart_spark.operators.iterative import _release
+from flink_quickstart_spark.session import fits_driver
 
 MERGE_SCHEMA = T.StructType(
     [
@@ -128,7 +129,6 @@ def learn_bpe_merges(
     spark: SparkSession,
     words: DataFrame,
     n_merges: int,
-    driver_vocab_budget: int = 2_000_000,
 ) -> DataFrame:
     """Learn ``n_merges`` BPE merges from a word-frequency table.
 
@@ -141,16 +141,16 @@ def learn_bpe_merges(
     binary string order, identical in Spark and the SQL oracle.
 
     Small-vocabulary fast path (r13): a word-frequency table within
-    ``driver_vocab_budget`` rows (the working set is vocabulary-sized
-    by design — see the module docstring) trains with the incremental
-    driver loop in :func:`_driver_bpe_merges`, value-identically;
-    above the budget the distributed per-merge aggregate below is the
-    path, unchanged.
+    ``DRIVER_BUDGETS["bpe"]`` rows (session.py; the working set is
+    vocabulary-sized by design — see the module docstring) trains with
+    the incremental driver loop in :func:`_driver_bpe_merges`,
+    value-identically; above the budget the distributed per-merge
+    aggregate below is the path, unchanged.
     """
     w = words.select(_wrap_symbols("word").alias("s"), F.col("cnt")).localCheckpoint(
         eager=True
     )
-    if w.count() <= driver_vocab_budget:
+    if fits_driver("bpe", w.count()):
         tbl = w.toArrow()
         merges_d = _driver_bpe_merges(
             tbl.column("s").to_pylist(),

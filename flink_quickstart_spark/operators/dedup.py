@@ -21,6 +21,8 @@ import os
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from flink_quickstart_spark.session import DRIVER_BUDGETS
+
 
 def exact_dedup(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
     """K1: group identical content by sha256; keep the lowest id as the
@@ -41,18 +43,26 @@ def _spread_if_narrow(df: DataFrame) -> DataFrame:
     CPU-heavy map work, and with the signature ``distinct`` removed
     (§2.4) they run in the SCAN stage — which for a few-row-group input
     is a single task at any core count. Repartition to the cluster's
-    parallelism ONLY when the plan's physical partitioning falls short
-    of it; on a real corpus (many files/row groups, or an upstream
-    exchange sized by data) this is a no-op, so no corpus shuffle is
-    added at scale. The check compiles the plan driver-side (no job).
-    Shuffling the raw (id, text) rows here is strictly cheaper than the
-    removed distinct's (id, shingle) exchange (~n× the text bytes)."""
-    sc = df.sparkSession.sparkContext
-    cores = sc.defaultParallelism
-    try:
+    parallelism ONLY when the plan's partitioning falls short of it; on
+    a real corpus (many files/row groups) this is a no-op, so no corpus
+    shuffle is added at scale. Shuffling the raw (id, text) rows here is
+    strictly cheaper than the removed distinct's (id, shingle) exchange.
+    No job runs: an exchange-free plan reports its exact partition
+    count; an adaptive plan (a join) would run its upstream stages to
+    report one, so it counts its input files' parquet row groups."""
+    from urllib.parse import urlparse
+
+    from flink_quickstart_spark.sources.tables import _parquet_row_groups
+
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        n = 0
+        for f in df.inputFiles():
+            u = urlparse(f)
+            n += _parquet_row_groups(u.path) if u.scheme in ("", "file") else 1
+    else:
         n = df.rdd.getNumPartitions()
-    except Exception:  # noqa: BLE001 — unplannable input: leave as-is
-        return df
     return df.repartition(cores) if n < cores else df
 
 
@@ -519,6 +529,15 @@ def _minhash_band_rows(
     return hashed.groupBy(id_col, "hash_idx").agg(F.min("h").alias("sig"))
 
 
+def _band_rows_bound(docs: DataFrame, num_hashes: int) -> int:
+    """Upper bound on the band rows ``docs`` hash to (≤ ``num_hashes``
+    per document), for the store writer's budget check. The count stops
+    one document past the budget, so an over-budget input costs a
+    bounded probe instead of a run of the caller's whole plan."""
+    cap = DRIVER_BUDGETS["store_write"] // int(num_hashes) + 1
+    return docs.limit(cap).count() * int(num_hashes)
+
+
 def minhash_build_store(
     df: DataFrame,
     path: str,
@@ -562,6 +581,7 @@ def minhash_build_store(
     (operators/maintenance.compact_minhash_store)."""
     from flink_quickstart_spark.operators.maintenance import (
         reset_store_generations,
+        write_partitioned,
         write_store_manifest,
     )
 
@@ -579,29 +599,10 @@ def minhash_build_store(
     if epoch_partitioned:
         bands = bands.withColumn("_epoch", F.lit(0).cast("int"))
         part_cols = ["_hmod", "_epoch"]
-    # r13 (§6): batch-sized builds write driver-side — Spark's per-file
-    # machinery costs ~20× the bytes at 125-row files; the row bound is
-    # exact metadata (≤ num_hashes signatures per doc), and over budget
-    # the distributed write below is the path, unchanged.
-    from flink_quickstart_spark.operators.maintenance import (
-        write_partitioned_small,
+    write_partitioned(
+        bands, f"{path}/bands", part_cols, ["band_id", "sig"], "overwrite",
+        n_rows=_band_rows_bound(df, num_hashes),
     )
-
-    if not write_partitioned_small(
-        bands,
-        f"{path}/bands",
-        part_cols,
-        ["band_id", "sig"],
-        df.count() * int(num_hashes),
-        mode="overwrite",
-    ):
-        (
-            bands.repartition("_hmod")
-            .sortWithinPartitions("_hmod", "band_id", "sig")
-            .write.mode("overwrite")
-            .partitionBy(*part_cols)
-            .parquet(f"{path}/bands")
-        )
     spark.createDataFrame(
         [
             (
@@ -662,6 +663,7 @@ def minhash_upsert_store(
     from flink_quickstart_spark.operators.maintenance import (
         read_store_rows,
         store_generation,
+        write_partitioned,
     )
 
     meta = read_store_rows(path, "meta")[0]
@@ -693,39 +695,19 @@ def minhash_upsert_store(
             "sig",
             F.pmod(F.col("sig"), F.lit(meta.hmod)).cast("int").alias("_hmod"),
         )
+        dest = os.path.join(gen, "bands")
         if is_epoch:
-            (
-                bands.withColumn("_epoch", F.lit(int(epoch)).cast("int"))
-                .repartition("_hmod")
-                .sortWithinPartitions("_hmod", "band_id", "sig")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_hmod", "_epoch")
-                .parquet(os.path.join(gen, "bands"))
+            # the epoch write keeps the distributed path (n_rows unknown)
+            write_partitioned(
+                bands.withColumn("_epoch", F.lit(int(epoch)).cast("int")),
+                dest, ["_hmod", "_epoch"], ["band_id", "sig"], "dynamic",
+                n_rows=None,
             )
         else:
-            # r13 (§6): batch-bounded appends write driver-side under
-            # the small-write budget (exact row bound ≤ num_hashes per
-            # doc); at scale the distributed append is unchanged.
-            from flink_quickstart_spark.operators.maintenance import (
-                write_partitioned_small,
+            write_partitioned(
+                bands, dest, ["_hmod"], ["band_id", "sig"], "append",
+                n_rows=_band_rows_bound(new_docs, meta.num_hashes),
             )
-
-            if not write_partitioned_small(
-                bands,
-                os.path.join(gen, "bands"),
-                ["_hmod"],
-                ["band_id", "sig"],
-                new_docs.count() * int(meta.num_hashes),
-                mode="append",
-            ):
-                (
-                    bands.repartition("_hmod")
-                    .sortWithinPartitions("_hmod", "band_id", "sig")
-                    .write.mode("append")
-                    .partitionBy("_hmod")
-                    .parquet(os.path.join(gen, "bands"))
-                )
 
 
 def ensure_minhash_store(
@@ -781,6 +763,7 @@ def _minhash_delete_into(spark, path, gen, del_docs, id_col, text_col) -> None:
         AbortStoreGeneration,
         read_store,
         read_store_rows,
+        write_partitioned,
     )
 
     meta = read_store_rows(path, "meta")[0]
@@ -822,30 +805,12 @@ def _minhash_delete_into(spark, path, gen, del_docs, id_col, text_col) -> None:
             .localCheckpoint(eager=True)
         )
         try:
-            # r13 (§6): the survivor set is touched-bucket-bounded and
-            # already materialized (localCheckpoint) — counting it is a
-            # cache scan; under the small-write budget the rewrite goes
-            # driver-side with the same dynamic-overwrite semantics.
-            from flink_quickstart_spark.operators.maintenance import (
-                write_partitioned_small,
+            # the survivor set is touched-bucket-bounded and already
+            # materialized (localCheckpoint) — counting it is a cache scan
+            write_partitioned(
+                survivors, os.path.join(gen, "bands"), part_cols,
+                ["band_id", "sig"], "dynamic", n_rows=survivors.count(),
             )
-
-            if not write_partitioned_small(
-                survivors,
-                os.path.join(gen, "bands"),
-                part_cols,
-                ["band_id", "sig"],
-                survivors.count(),
-                mode="dynamic",
-            ):
-                (
-                    survivors.repartition("_hmod")
-                    .sortWithinPartitions("_hmod", "band_id", "sig")
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy(*part_cols)
-                    .parquet(os.path.join(gen, "bands"))
-                )
             surviving = {
                 tuple(int(r[c]) for c in part_cols)
                 for r in survivors.select(*part_cols).distinct().collect()

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from flink_quickstart_spark.session import fits_driver, tracked_persist
+
 
 def _truncate_lineage(df: DataFrame, use_reliable: bool) -> DataFrame:
     if use_reliable:
@@ -159,7 +161,6 @@ def connected_components(
     max_iter: int = 50,
     checkpoint_interval: int = 1,
     reliable_checkpoint: bool = False,
-    driver_edge_budget: int = 2_000_000,
 ) -> DataFrame:
     """Min-label propagation over an undirected edge list.
 
@@ -194,22 +195,19 @@ def connected_components(
     if reliable_checkpoint:
         raw = _truncate_lineage(raw, True)
     else:
-        from pyspark.storagelevel import StorageLevel
-
-        raw = raw.persist(StorageLevel.MEMORY_AND_DISK)
+        raw = tracked_persist(raw)
         n_edges = raw.count()
     # Small-graph fast path (r13, §1.2): the loop's per-iteration cost
     # at small edge counts is pure job/exchange overhead (measured
     # 0.35 s × 17 rounds for a 920-edge cosine pair graph), so a graph
-    # whose RAW edge list fits a budget-guarded driver collect (≤ 2 M
-    # rows ≈ 32 MB Arrow — well inside the 2 GiB broadcast-budget
-    # discipline of operators/similarity.py; union-find needs no
-    # symmetrization) is solved exactly with the vectorized driver
-    # hook-and-compress instead. The count is the materializing job;
-    # above the budget — any real corpus — the distributed loop below
-    # is the path, unchanged. Labels are identical by construction
-    # (min reachable id, deterministic either way).
-    if n_edges is not None and n_edges <= driver_edge_budget:
+    # whose RAW edge list fits DRIVER_BUDGETS["connected_components"]
+    # (session.py; union-find needs no symmetrization) is solved
+    # exactly with the vectorized driver hook-and-compress instead. The
+    # count is the materializing job; above the budget — any real
+    # corpus — the distributed loop below is the path, unchanged.
+    # Labels are identical by construction (min reachable id,
+    # deterministic either way).
+    if fits_driver("connected_components", n_edges):
         labels = _driver_components(raw.toArrow(), edges.sparkSession)
         _release(raw)
         return labels
@@ -337,7 +335,6 @@ def pagerank(
     damping: float = 0.85,
     checkpoint_interval: int = 1,
     reliable_checkpoint: bool = False,
-    driver_edge_budget: int = 4_000_000,
 ) -> DataFrame:
     """Power-iteration PageRank over a directed edge list ``(src, dst)``.
 
@@ -361,6 +358,11 @@ def pagerank(
     set) are materialized once before the loop (r6): left lazy, each of
     them re-runs the caller's edge-construction plan every single
     iteration.
+
+    The per-iteration scalar collect is a driver round trip: in cluster
+    mode the distributed loop pays ``iterations`` × the driver–executor
+    RTT on top of the job cost. Graphs within
+    ``DRIVER_BUDGETS["pagerank"]`` edges skip the loop entirely.
     """
     # Materialize the EDGE LIST itself first (r13, §5): every loop-static
     # below (nodes, out_deg, dangling set, degree-annotated edges) reads
@@ -373,16 +375,13 @@ def pagerank(
     if reliable_checkpoint:
         edges = _truncate_lineage(edges, True)
     else:
-        from pyspark.storagelevel import StorageLevel
-
-        edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
+        edges = tracked_persist(edges)
         n_edges = edges.count()
     # Small-graph fast path (r13, §1.2): a graph whose edge list fits
-    # the driver budget (4 M rows ≈ 64 MB Arrow — well inside the 2 GiB
-    # broadcast-budget discipline of operators/similarity.py) runs the
-    # same power iteration vectorized on the driver; above it — any
-    # real corpus — the distributed loop below is the path, unchanged.
-    if n_edges is not None and n_edges <= driver_edge_budget:
+    # DRIVER_BUDGETS["pagerank"] (session.py) runs the same power
+    # iteration vectorized on the driver; above it — any real corpus —
+    # the distributed loop below is the path, unchanged.
+    if fits_driver("pagerank", n_edges):
         ranks = _driver_pagerank(
             edges.toArrow(), iterations, damping, edges.sparkSession
         )

@@ -43,6 +43,8 @@ import socket
 import time
 import uuid
 
+from flink_quickstart_spark.session import DRIVER_BUDGETS, fits_driver
+
 
 class StoreWriterConflict(RuntimeError):
     """A second writer tried to run a maintenance op on a store whose
@@ -935,10 +937,9 @@ def require_local_path(path: str, op: str) -> None:
     delete == rebuild would break INVISIBLY (r9 ADVICE). Fail loudly
     instead; a warehouse deployment expresses the same step as
     ALTER TABLE DROP PARTITION / a Delta DELETE."""
-    scheme = path.split("://", 1)[0] if "://" in path else ""
-    if scheme and scheme != "file":
+    if _local_fs_path(path) is None:
         raise NotImplementedError(
-            f"{op}: store path {path!r} uses scheme {scheme!r}; this "
+            f"{op}: store path {path!r} uses a remote scheme; this "
             "op's directory-level maintenance (emptied-partition drop / "
             "atomic swap) runs local filesystem calls and would "
             "silently leave stale partition files on remote storage. "
@@ -947,94 +948,102 @@ def require_local_path(path: str, op: str) -> None:
         )
 
 
-_SMALL_WRITE_ROWS = int(
-    os.environ.get("SPARK_GRAFT_SMALL_WRITE_ROWS", "200000") or 0
-)
+def _local_fs_path(path: str) -> str | None:
+    """``path`` as a local filesystem path (``file://`` stripped), or
+    None for a remote scheme (hdfs://, s3a://, ...)."""
+    scheme = path.split("://", 1)[0] if "://" in path else ""
+    if scheme and scheme != "file":
+        return None
+    return path[7:] if path.startswith("file://") else path
 
 
-def write_partitioned_small(
+def _write_partition_file(
+    tbl, part_dir: str, sort_cols: list[str], replace: bool
+) -> None:
+    """Write ``tbl`` sorted by ``sort_cols`` as ONE zstd parquet file into
+    the hive partition directory ``part_dir`` (emptied first when
+    ``replace``), named like Spark's writer output, so readers,
+    manifests and GC see one store layout."""
+    import pyarrow.parquet as pq
+
+    if replace and os.path.isdir(part_dir):
+        shutil.rmtree(part_dir)
+    os.makedirs(part_dir, exist_ok=True)
+    pq.write_table(
+        tbl.sort_by([(c, "ascending") for c in sort_cols]),
+        os.path.join(part_dir, f"part-00000-{uuid.uuid4()}-c000.zstd.parquet"),
+        compression="zstd",
+    )
+
+
+def write_partitioned(
     df,
     dest: str,
     partition_cols: list[str],
     sort_cols: list[str],
-    n_rows_upper: int | None,
-    mode: str = "append",
-) -> bool:
-    """Budget-guarded DRIVER-SIDE hive-partitioned parquet write — the
-    write twin of ``read_store_rows`` (r12, guide §6): a store publish
-    whose batch is driver-budget-sized pays Spark's per-small-file
-    machinery ~20× over the bytes moved (measured at sf0.1: the 64-dir
-    ``_hmod`` write of an 8 k-row batch costs ~1.3 s in Spark vs 0.05 s
-    written directly — task setup + Hadoop FS + writer init + commit per
-    ~125-row file). Below ``n_rows_upper ≤ $SPARK_GRAFT_SMALL_WRITE_ROWS``
-    (default 200 k rows ≈ single-digit MB; 0 disables) the batch is
-    Arrow-collected and written with pyarrow into the SAME layout: one
-    sorted file per hive partition dir, identical dir encoding, stats
-    on, ``*.zstd.parquet`` naming, so readers/manifest/GC see the same
-    store. Above the budget — any real corpus/batch — returns False and
-    the caller runs the distributed write unchanged.
+    mode: str,
+    n_rows: int | None,
+) -> None:
+    """The store writer: ``df`` as a hive-partitioned parquet dir with
+    ONE file per partition, rows sorted by ``sort_cols`` within it.
 
-    ``mode``: ``append`` adds files next to existing ones (the upsert
-    contract), ``overwrite`` truncates ``dest`` first (fresh build),
-    ``dynamic`` truncates only the partition dirs being written (the
-    compaction contract). Returns True iff the write happened here.
-    Partition values must be integer-typed and non-null (true of every
-    store layout: pmod/bucket/cluster ids); anything else falls back."""
-    if (
-        n_rows_upper is None
-        or _SMALL_WRITE_ROWS <= 0
-        or n_rows_upper > _SMALL_WRITE_ROWS
-    ):
-        return False
-    scheme = dest.split("://", 1)[0] if "://" in dest else ""
-    if scheme and scheme != "file":
-        return False
-    dest = dest[7:] if dest.startswith("file://") else dest
+    ``mode``: ``overwrite`` truncates ``dest`` (fresh build), ``append``
+    adds files next to the existing ones (flat upsert), ``dynamic``
+    replaces only the partition dirs being written (epoch upsert,
+    delete survivors, compaction).
+
+    ``n_rows`` is an upper bound on ``df``'s rows (None = unknown). A
+    local write within ``DRIVER_BUDGETS["store_write"]`` is Arrow-
+    collected and written with pyarrow (guide §6): Spark's per-file
+    machinery costs ~20× the bytes moved at store-batch sizes (measured
+    at sf0.1: the 64-dir ``_hmod`` write of an 8 k-row batch takes
+    ~1.3 s in Spark vs 0.05 s here — task setup, Hadoop FS, writer init
+    and commit per ~125-row file). Otherwise one Spark job writes it.
+    Partition values must be non-null integers (every store layout:
+    pmod/bucket/cluster ids)."""
+    if mode not in ("overwrite", "append", "dynamic"):
+        raise ValueError(f"write_partitioned: unknown mode {mode!r}")
+    local = _local_fs_path(dest)
+    if local is None or not fits_driver("store_write", n_rows):
+        w = (
+            df.repartition(*partition_cols)
+            .sortWithinPartitions(*partition_cols, *sort_cols)
+            .write
+        )
+        if mode == "dynamic":
+            w = w.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        else:
+            w = w.mode(mode)
+        w.partitionBy(*partition_cols).parquet(dest)
+        return
 
     import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    try:
-        tbl = df.toArrow()
-    except Exception:  # noqa: BLE001 — unsupported type → distributed path
-        return False
-    for c in partition_cols:
-        if (
-            not pa.types.is_integer(tbl.schema.field(c).type)
-            or tbl.column(c).null_count
-        ):
-            return False
-    tbl = tbl.sort_by([(c, "ascending") for c in [*partition_cols, *sort_cols]])
-    if mode == "overwrite" and os.path.isdir(dest):
-        shutil.rmtree(dest)
-    os.makedirs(dest, exist_ok=True)
+    tbl = df.toArrow().sort_by([(c, "ascending") for c in partition_cols])
     n = tbl.num_rows
-    if n == 0:
-        return True
     keys = [
         tbl.column(c).to_numpy(zero_copy_only=False) for c in partition_cols
     ]
     change = np.zeros(n, dtype=bool)
-    change[0] = True
+    change[:1] = True
     for k in keys:
         change[1:] |= k[1:] != k[:-1]
     bounds = np.flatnonzero(change).tolist() + [n]
-    data_cols = [c for c in tbl.column_names if c not in partition_cols]
-    for s, e in zip(bounds[:-1], bounds[1:]):
-        d = os.path.join(
-            dest,
-            *[f"{c}={int(k[s])}" for c, k in zip(partition_cols, keys)],
+    # every partition dir name is resolved before the first mutation
+    dirs = [
+        os.path.join(
+            local, *[f"{c}={int(k[s])}" for c, k in zip(partition_cols, keys)]
         )
-        if mode == "dynamic" and os.path.isdir(d):
-            shutil.rmtree(d)
-        os.makedirs(d, exist_ok=True)
-        pq.write_table(
-            tbl.slice(s, e - s).select(data_cols),
-            os.path.join(d, f"part-00000-{uuid.uuid4()}-c000.zstd.parquet"),
-            compression="zstd",
+        for s in bounds[:-1]
+    ]
+    data = tbl.select([c for c in tbl.column_names if c not in partition_cols])
+    if mode == "overwrite" and os.path.isdir(local):
+        shutil.rmtree(local)
+    os.makedirs(local, exist_ok=True)
+    for d, s, e in zip(dirs, bounds[:-1], bounds[1:]):
+        _write_partition_file(
+            data.slice(s, e - s), d, sort_cols, replace=mode == "dynamic"
         )
-    return True
 
 
 def data_file_counts(base_dir: str) -> dict[str, int]:
@@ -1047,20 +1056,14 @@ def data_file_counts(base_dir: str) -> dict[str, int]:
     return counts
 
 
-def _parse_partition_values(rel: str, partition_cols: list[str]) -> tuple:
-    """('_hmod=3/band_id=1', ['_hmod','band_id']) -> ('3', '1') — the
-    Hive-encoded string values of one partition directory."""
-    parts = dict(seg.split("=", 1) for seg in rel.split(os.sep) if "=" in seg)
-    return tuple(parts[c] for c in partition_cols)
-
-
 def compact_partitions(
     spark,
     data_dir: str,
     partition_cols: list[str],
     sort_cols: list[str],
     max_files: int | None = None,
-    target_dir: str | None = None,
+    *,
+    target_dir: str,
 ) -> dict[str, int]:
     """Rewrite partitions of a Hive-partitioned parquet dir as ONE file
     each, rows sorted by ``sort_cols`` within it (restores page-level
@@ -1074,137 +1077,77 @@ def compact_partitions(
     ``max_files=None`` compacts the WHOLE store (one shuffle on the
     partition key — the full OPTIMIZE window). ``max_files=N`` is the
     INCREMENTAL form (VERDICT r9 #3): only partitions currently holding
-    more than N data files are read and rewritten — the scan prunes to
-    the over-threshold partition directories (static partition-value
-    filter on the file listing the threshold itself produced), so cost
-    is ∝ rows in the touched partitions, not the store. That is the
+    more than N data files are read and rewritten — the scan reads only
+    the over-threshold partition directories (from the file listing the
+    threshold itself produced), so cost is ∝ rows in the touched
+    partitions, not the store. That is the
     shape a 100 TB maintenance window runs nightly ("compact where
     files/partition > N"); untouched partitions are never opened —
     their files (and mtimes) are bit-identical after the call.
 
-    ``target_dir`` (generation discipline, r11): read from ``data_dir``
-    (the current generation) and rewrite into ``target_dir`` (the staged
-    next generation, pre-populated by the hardlink clone) — the caller
-    publishes atomically. Default (None) rewrites in place — only
-    correct for private non-served directories."""
-    write_dir = target_dir if target_dir is not None else data_dir
-    counts = data_file_counts(data_dir)
-    before = sum(counts.values())
-    targets = None
-    if max_files is not None:
-        targets = [
-            _parse_partition_values(rel, partition_cols)
-            for rel, n in counts.items()
-            if n > max_files
-        ]
-        if not targets:
-            return {
-                "files_before": before,
-                "files_after": before,
-                "partitions_total": len(counts),
-                "partitions_compacted": 0,
-            }
-    if not _compact_driver_side(
-        data_dir, partition_cols, sort_cols, targets, write_dir
-    ):
-        df = spark.read.parquet(data_dir)
-        if targets is not None:
-            # partition-value prune: Hive string values compare against
-            # the typed partition columns via Spark's implicit cast, and
-            # the predicate is on partition cols only →
-            # file-listing-level prune
-            from pyspark.sql import functions as F
-
-            pred = None
-            for vals in targets:
-                clause = None
-                for c, v in zip(partition_cols, vals):
-                    eq = F.col(c) == F.lit(v)
-                    clause = eq if clause is None else (clause & eq)
-                pred = clause if pred is None else (pred | clause)
-            df = df.where(pred)
-        (
-            df.repartition(*partition_cols)
-            .sortWithinPartitions(*partition_cols, *sort_cols)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*partition_cols)
-            .parquet(write_dir)
-        )
-    after = sum(data_file_counts(write_dir).values())
-    return {
-        "files_before": before,
-        "files_after": after,
-        "partitions_total": len(counts),
-        "partitions_compacted": len(counts) if targets is None else len(targets),
-    }
-
-
-def _compact_driver_side(
-    data_dir: str,
-    partition_cols: list[str],
-    sort_cols: list[str],
-    targets: list[tuple] | None,
-    write_dir: str,
-) -> bool:
-    """Driver-side form of :func:`compact_partitions` for stores whose
-    rewritten rows fit the small-write budget (guide §6, the
-    write_partitioned_small rationale; footer ``num_rows`` sums decide —
-    fs metadata only, no job). Reads each touched partition's files
-    with pyarrow, concatenates, sorts by ``sort_cols`` and writes ONE
-    file per partition into ``write_dir`` with dynamic-overwrite
-    semantics (only rewritten partition dirs are replaced). Row
-    multiset and layout identical to the distributed path. Returns
-    False (caller runs the Spark rewrite) when over budget, remote, or
-    anything unexpected is encountered."""
-    if _SMALL_WRITE_ROWS <= 0:
-        return False
-    scheme = data_dir.split("://", 1)[0] if "://" in data_dir else ""
-    if scheme and scheme != "file":
-        return False
-    src = data_dir[7:] if data_dir.startswith("file://") else data_dir
-    dst = write_dir[7:] if write_dir.startswith("file://") else write_dir
-
+    Reads ``data_dir`` (the current generation) and rewrites into
+    ``target_dir`` (the staged next generation, pre-populated by the
+    hardlink clone); the caller publishes atomically, and an error
+    aborts the staged generation. Driver vs Spark is decided from the
+    touched partitions' parquet footer row counts (fs metadata, no job)
+    BEFORE anything is written: within ``DRIVER_BUDGETS["store_write"]``
+    each partition's files are read with pyarrow and rewritten as one
+    sorted file; above it one Spark dynamic-overwrite job does it."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    try:
-        files_by_rel: dict[str, list[str]] = {}
-        total = 0
-        for root, _dirs, files in os.walk(src):
-            fl = sorted(f for f in files if f.endswith(".parquet"))
-            if not fl:
-                continue
-            rel = os.path.relpath(root, src)
-            if (
-                targets is not None
-                and _parse_partition_values(rel, partition_cols)
-                not in targets
-            ):
-                continue
-            paths = [os.path.join(root, f) for f in fl]
-            for p in paths:
-                total += pq.ParquetFile(p).metadata.num_rows
-                if total > _SMALL_WRITE_ROWS:
-                    return False
-            files_by_rel[rel] = paths
-        for rel, paths in files_by_rel.items():
-            tbl = pa.concat_tables([pq.read_table(p) for p in paths])
-            tbl = tbl.sort_by([(c, "ascending") for c in sort_cols])
-            d = os.path.join(dst, rel)
-            if os.path.isdir(d):
-                shutil.rmtree(d)  # dynamic overwrite of THIS partition
-            os.makedirs(d, exist_ok=True)
-            pq.write_table(
-                tbl,
-                os.path.join(
-                    d, f"part-00000-{uuid.uuid4()}-c000.zstd.parquet"
-                ),
-                compression="zstd",
+    counts = data_file_counts(data_dir)
+    rels = [rel for rel, n in counts.items() if max_files is None or n > max_files]
+    if not rels:
+        return _compact_stats(counts, None, 0)
+    src, dst = _local_fs_path(data_dir), _local_fs_path(target_dir)
+    files, n_rows = {}, None
+    if src is not None and dst is not None:
+        n_rows = 0
+        for rel in rels:
+            d = os.path.join(src, rel)
+            files[rel] = [
+                os.path.join(d, f)
+                for f in sorted(os.listdir(d))
+                if f.endswith(".parquet")
+            ]
+            n_rows += sum(pq.ParquetFile(p).metadata.num_rows for p in files[rel])
+            if n_rows > DRIVER_BUDGETS["store_write"]:
+                break  # over budget already: stop opening footers
+    if fits_driver("store_write", n_rows):
+        for rel, paths in files.items():
+            _write_partition_file(
+                pa.concat_tables([pq.read_table(p) for p in paths]),
+                os.path.join(dst, rel),
+                sort_cols,
+                replace=True,
             )
-    except Exception:  # noqa: BLE001 — schema drift etc. → Spark path
-        return False
-    return True
+    else:
+        # the scan lists only the touched partition dirs; basePath keeps
+        # their hive columns
+        df = spark.read.option("basePath", data_dir).parquet(
+            *[os.path.join(data_dir, rel) for rel in rels]
+        )
+        write_partitioned(
+            df, target_dir, partition_cols, sort_cols, "dynamic", n_rows=None
+        )
+    return _compact_stats(counts, target_dir, len(rels))
+
+
+def _compact_stats(
+    counts: dict[str, int], written_dir: str | None, compacted: int
+) -> dict[str, int]:
+    """A compaction's result record from the source's per-partition file
+    counts; files after are counted in ``written_dir`` (None: nothing
+    was written)."""
+    before = sum(counts.values())
+    return {
+        "files_before": before,
+        "files_after": before if written_dir is None
+        else sum(data_file_counts(written_dir).values()),
+        "partitions_total": len(counts),
+        "partitions_compacted": compacted,
+    }
 
 
 def _noop_compact_stats(src: str, max_files: int | None) -> dict | None:
@@ -1220,13 +1163,7 @@ def _noop_compact_stats(src: str, max_files: int | None) -> dict | None:
     counts = data_file_counts(src)
     if any(n > max_files for n in counts.values()):
         return None
-    total = sum(counts.values())
-    return {
-        "files_before": total,
-        "files_after": total,
-        "partitions_total": len(counts),
-        "partitions_compacted": 0,
-    }
+    return _compact_stats(counts, None, 0)
 
 
 def _compact_store_subdir(
@@ -1309,23 +1246,12 @@ def _fold_store_epochs(spark, src_dir: str, dst_dir: str) -> dict[str, int]:
     from pyspark.sql import functions as F
 
     counts = data_file_counts(src_dir)
-    before = sum(counts.values())
-    (
-        spark.read.parquet(src_dir)
-        .withColumn("_epoch", F.lit(0).cast("int"))
-        .repartition("_hmod")
-        .sortWithinPartitions("_hmod", "band_id", "sig")
-        .write.mode("overwrite")
-        .partitionBy("_hmod", "_epoch")
-        .parquet(dst_dir)
+    write_partitioned(
+        spark.read.parquet(src_dir).withColumn("_epoch", F.lit(0).cast("int")),
+        dst_dir, ["_hmod", "_epoch"], ["band_id", "sig"], "overwrite",
+        n_rows=None,
     )
-    after_counts = data_file_counts(dst_dir)
-    return {
-        "files_before": before,
-        "files_after": sum(after_counts.values()),
-        "partitions_total": len(counts),
-        "partitions_compacted": len(counts),
-    }
+    return _compact_stats(counts, dst_dir, len(counts))
 
 
 def compact_lsh_index(
@@ -1913,6 +1839,7 @@ __all__ = [
     "pinned_generations",
     "reset_store_generations",
     "require_local_path",
+    "write_partitioned",
     "compact_partitions",
     "compact_minhash_store",
     "compact_lsh_index",

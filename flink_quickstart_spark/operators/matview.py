@@ -53,6 +53,7 @@ from flink_quickstart_spark.operators.maintenance import (
     store_data_dir,
     store_generation,
     store_writer_lease,
+    write_partitioned,
     write_store_manifest,
 )
 
@@ -246,13 +247,9 @@ def _write_groups(
     group_cols: list[str],
     part_cols: tuple[str, ...] = ("_gmod",),
 ) -> None:
-    (
-        df.repartition(*part_cols)
-        .sortWithinPartitions(*part_cols, *group_cols)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*part_cols)
-        .parquet(os.path.join(path, "groups"))
+    write_partitioned(
+        df, os.path.join(path, "groups"), list(part_cols), group_cols,
+        "dynamic", n_rows=None,
     )
 
 
@@ -294,10 +291,9 @@ def mv_build(
         if epoch_partitioned:
             parts = parts.withColumn("_epoch", F.lit(0).cast("int"))
             part_cols = ["_gmod", "_epoch"]
-        parts.repartition(*part_cols).sortWithinPartitions(
-            *part_cols, *group_cols
-        ).write.mode("overwrite").partitionBy(*part_cols).parquet(
-            os.path.join(path, "groups")
+        write_partitioned(
+            parts, os.path.join(path, "groups"), part_cols, group_cols,
+            "overwrite", n_rows=None,
         )
         tmp = _meta_path(path) + ".tmp"
         with open(tmp, "w") as fh:
@@ -693,6 +689,7 @@ def compact_mv(spark, path: str, max_files: int | None = None) -> dict:
     maintenance window behind the same writer lease, mirroring the
     signature store's epoch folding)."""
     from flink_quickstart_spark.operators.maintenance import (
+        _compact_stats,
         _noop_compact_stats,
         compact_partitions,
         data_file_counts,
@@ -709,7 +706,6 @@ def compact_mv(spark, path: str, max_files: int | None = None) -> dict:
             groups_dir = store_data_dir(path, "groups")
             aggs = [tuple(a) for a in meta["aggs"]]
             counts = data_file_counts(groups_dir)
-            before = sum(counts.values())
             folded = (
                 read_store(spark, path, "groups")
                 .drop("_epoch")
@@ -718,20 +714,13 @@ def compact_mv(spark, path: str, max_files: int | None = None) -> dict:
                 .where(F.col(_CNT) > 0)
                 .withColumn("_epoch", F.lit(0).cast("int"))
             )
-            (
-                folded.repartition("_gmod")
-                .sortWithinPartitions("_gmod", *meta["group_cols"])
-                .write.mode("overwrite")
-                .partitionBy("_gmod", "_epoch")
-                .parquet(os.path.join(gen, "groups"))
+            write_partitioned(
+                folded, os.path.join(gen, "groups"), ["_gmod", "_epoch"],
+                meta["group_cols"], "overwrite", n_rows=None,
             )
-            after_counts = data_file_counts(os.path.join(gen, "groups"))
-            stats = {
-                "files_before": before,
-                "files_after": sum(after_counts.values()),
-                "partitions_total": len(counts),
-                "partitions_compacted": len(counts),
-            }
+            stats = _compact_stats(
+                counts, os.path.join(gen, "groups"), len(counts)
+            )
         # Every epoch folded into the base: the used-epoch-id map
         # resets — folded ids may be reused (their replay domain no
         # longer exists; the reuse guard would otherwise reject

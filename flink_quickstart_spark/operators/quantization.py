@@ -539,7 +539,8 @@ def _adc_scan_coalesce(df: DataFrame, path: str, subdir: str = "codes",
     pfx = subdir.rstrip("/") + os.sep
     entries = [e for e in man["files"] if e["path"].startswith(pfx)]
     if prefixes is not None:
-        keep = tuple(os.path.join(subdir, p) for p in prefixes)
+        # the separator keeps cluster_id=3 from matching cluster_id=30
+        keep = tuple(os.path.join(subdir, p) + os.sep for p in prefixes)
         entries = [e for e in entries if e["path"].startswith(keep)]
     total = sum(e["bytes"] for e in entries)
     n = max(1, math.ceil(total / (4 * 1024 * 1024)))

@@ -1701,6 +1701,7 @@ def lsh_ann_buckets(
             "d2",
         )
         .withColumn("dist", dist)
-        .where(F.col("dist") <= threshold)
+        # strict, as approxSimilarityJoin filters
+        .where(F.col("dist") < threshold)
         .select("d1", "d2", F.round("dist", 6).alias("dist"))
     )

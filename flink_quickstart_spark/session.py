@@ -21,9 +21,12 @@ executor sizing change, both env-overridable here.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
 
 
 def shuffle_partitions_for_bytes(
@@ -97,6 +100,33 @@ def release_tracked_persists() -> int:
             pass
     _TRACKED_PERSISTS.clear()
     return n
+
+
+# --- driver fast-path budgets (docs/SCALE_DESIGN.md, operating envelope)
+#
+# Small inputs cost a distributed step its fixed per-job overhead, so
+# these sites run the same algorithm on the driver over an Arrow collect
+# when the observed size (edges, distinct words, store rows) fits; each
+# budget keeps the driver's working set ≤ ~64 MB. 0 disables a site.
+
+DRIVER_BUDGETS: dict[str, int] = {
+    "connected_components": 2_000_000,
+    "pagerank": 4_000_000,
+    "bpe": 2_000_000,
+    "store_write": 200_000,
+}
+
+
+def fits_driver(site: str, n: int | None) -> bool:
+    """True iff ``n`` (the site's observed size, None = unknown) fits
+    ``DRIVER_BUDGETS[site]``. Logs the decision at DEBUG."""
+    budget = DRIVER_BUDGETS[site]
+    ok = n is not None and 0 < budget and n <= budget
+    _log.debug(
+        "driver budget site=%s budget=%d observed=%s path=%s",
+        site, budget, n, "driver" if ok else "distributed",
+    )
+    return ok
 
 
 def get_spark(

@@ -14,12 +14,40 @@ covered by the oracle gate:
 4. The signature kernels with the shingle distinct removed (§2.4) are
    value-identical to the distinct form (min over multiset == min over
    set) — checked directly against a with-distinct recomputation.
+5. Every driver fast path (session.DRIVER_BUDGETS) returns what the
+   distributed plan returns, and a store write that fails part-way
+   leaves the published store untouched.
 """
 
 from __future__ import annotations
 
+import logging
+import os
+import random
+from functools import partial
+from types import SimpleNamespace
+
 import pytest
 from pyspark.sql import functions as F
+
+from flink_quickstart_spark.operators.bpe import learn_bpe_merges
+from flink_quickstart_spark.operators.dedup import (
+    _spread_if_narrow,
+    minhash_build_store,
+    minhash_delete_store,
+    minhash_upsert_store,
+)
+from flink_quickstart_spark.operators.iterative import (
+    connected_components,
+    pagerank,
+)
+from flink_quickstart_spark.operators.maintenance import (
+    compact_minhash_store,
+    data_file_counts,
+    read_store,
+    store_data_dir,
+)
+from flink_quickstart_spark.session import DRIVER_BUDGETS, fits_driver
 
 SF = "/root/testdata/sf0.001"
 
@@ -28,20 +56,21 @@ def _jobs_in_group(spark, group: str) -> int:
     return len(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
 
 
-def test_pagerank_one_job_per_iteration(spark):
-    from flink_quickstart_spark.operators.iterative import pagerank
+def _rows(df) -> list[tuple]:
+    return sorted(map(tuple, df.collect()))
 
+
+def test_pagerank_one_job_per_iteration(spark, monkeypatch):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (3, 4), (5, 3)], "src long, dst long"
     )
     iterations = 4
-    # driver_edge_budget=0 forces the DISTRIBUTED loop (the fast path
-    # is pinned separately below)
+    # a zero budget forces the DISTRIBUTED loop (the fast path is
+    # pinned separately below)
+    monkeypatch.setitem(DRIVER_BUDGETS, "pagerank", 0)
     spark.sparkContext.setJobGroup("r13-pr-jobs", "pagerank job count")
     try:
-        ranks = pagerank(
-            edges, iterations=iterations, driver_edge_budget=0
-        ).collect()
+        ranks = pagerank(edges, iterations=iterations).collect()
     finally:
         spark.sparkContext.setJobGroup(None, None)
     # AQE splits each action into one job per shuffle stage, so the
@@ -54,16 +83,13 @@ def test_pagerank_one_job_per_iteration(spark):
     assert abs(sum(r["rank"] for r in ranks) - 1.0) < 1e-9
 
 
-def test_connected_components_one_job_per_iteration(spark):
-    from flink_quickstart_spark.operators.iterative import (
-        connected_components,
-    )
-
+def test_connected_components_one_job_per_iteration(spark, monkeypatch):
     # path graph 1-2-3-4-5 plus isolated edge 10-11: diameter 4 → the
     # loop converges after 4 changing iterations + 1 no-change check.
-    # driver_edge_budget=0 forces the DISTRIBUTED loop (the fast path
-    # is pinned separately below) so this keeps testing the fused
+    # A zero budget forces the DISTRIBUTED loop (the fast path is
+    # pinned separately below) so this keeps testing the fused
     # convergence count.
+    monkeypatch.setitem(DRIVER_BUDGETS, "connected_components", 0)
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)], "src long, dst long"
     )
@@ -71,7 +97,7 @@ def test_connected_components_one_job_per_iteration(spark):
     try:
         labels = {
             r["node"]: r["component"]
-            for r in connected_components(edges, driver_edge_budget=0).collect()
+            for r in connected_components(edges).collect()
         }
     finally:
         spark.sparkContext.setJobGroup(None, None)
@@ -82,73 +108,6 @@ def test_connected_components_one_job_per_iteration(spark):
     # build) vs 39 for the old eager-checkpoint-then-count shape on
     # this exact graph — one job per iteration saved
     assert _jobs_in_group(spark, "r13-cc-jobs") <= 38
-
-
-def test_pagerank_fast_path_matches_distributed(spark):
-    """The budget-guarded driver power iteration agrees with the
-    distributed loop to well inside the key's round-6 output precision
-    (the same double-summation-order envelope the DuckDB oracle
-    already rides)."""
-    import random
-
-    from flink_quickstart_spark.operators.iterative import pagerank
-
-    rng = random.Random(13)
-    edges = list(
-        {
-            (rng.randrange(0, 60), rng.randrange(0, 60))
-            for _ in range(200)
-        }
-    )
-    edges += [(100, 101)]  # dangling dst + isolated pair
-    df = spark.createDataFrame(edges, "src long, dst long")
-    fast = {
-        r["node"]: r["rank"] for r in pagerank(df, iterations=8).collect()
-    }
-    dist = {
-        r["node"]: r["rank"]
-        for r in pagerank(df, iterations=8, driver_edge_budget=0).collect()
-    }
-    assert set(fast) == set(dist)
-    for node in fast:
-        assert abs(fast[node] - dist[node]) < 1e-12
-    assert abs(sum(fast.values()) - 1.0) < 1e-9
-
-
-def test_connected_components_fast_path_matches_distributed(spark):
-    """The budget-guarded driver union-find returns label-identical
-    results to the distributed min-label loop, on an adversarial mix:
-    chains (diameter > 1), a cycle, a star, ids out of order, and
-    duplicate/self edges."""
-    import random
-
-    from flink_quickstart_spark.operators.iterative import (
-        connected_components,
-    )
-
-    rng = random.Random(13)
-    edges = []
-    # three chains with shuffled ids
-    for base in (100, 200, 300):
-        ids = list(range(base, base + 12))
-        rng.shuffle(ids)
-        edges += list(zip(ids, ids[1:]))
-    edges += [(1, 2), (2, 3), (3, 1)]  # cycle
-    edges += [(50, x) for x in range(51, 58)]  # star
-    edges += [(400, 401), (401, 400), (400, 400)]  # dup + self edge
-    df = spark.createDataFrame(edges, "src long, dst long")
-
-    fast = {
-        r["node"]: r["component"] for r in connected_components(df).collect()
-    }
-    dist = {
-        r["node"]: r["component"]
-        for r in connected_components(df, driver_edge_budget=0).collect()
-    }
-    assert fast == dist
-    # and each component label is the component's min node id
-    for node, comp in fast.items():
-        assert comp <= node
 
 
 def test_tracked_persist_release(spark):
@@ -181,82 +140,206 @@ def test_operator_persists_are_tracked(spark):
     assert release_tracked_persists() >= 1
 
 
-def test_bpe_driver_trainer_matches_distributed(spark):
-    """The budget-guarded driver BPE trainer returns the IDENTICAL
-    merge table (steps, pairs, counts) as the distributed per-merge
-    aggregate loop — including tie-breaks (ascending binary pair
-    order) and greedy left-to-right merge application."""
-    from flink_quickstart_spark.operators.bpe import learn_bpe_merges
+def _pagerank_case(spark, _path):
+    rng = random.Random(13)
+    edges = list({(rng.randrange(60), rng.randrange(60)) for _ in range(200)})
+    edges += [(100, 101)]  # dangling dst + isolated pair
+    df = spark.createDataFrame(edges, "src long, dst long")
+    ranks = {r["node"]: r["rank"] for r in pagerank(df, iterations=8).collect()}
+    assert abs(sum(ranks.values()) - 1.0) < 1e-9
+    return ranks
 
+
+def _components_case(spark, _path):
+    """Chains with shuffled ids (diameter > 1), a cycle, a star, and
+    duplicate/self edges."""
+    rng = random.Random(13)
+    edges = []
+    for base in (100, 200, 300):
+        ids = list(range(base, base + 12))
+        rng.shuffle(ids)
+        edges += list(zip(ids, ids[1:]))
+    edges += [(1, 2), (2, 3), (3, 1), (400, 401), (401, 400), (400, 400)]
+    edges += [(50, x) for x in range(51, 58)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    labels = dict(map(tuple, connected_components(df).collect()))
+    assert all(comp <= node for node, comp in labels.items())
+    return labels
+
+
+def _bpe_case(spark, _path):
+    """Same merge table, tie-breaks (ascending binary pair order) and
+    greedy left-to-right merge application included."""
     docs = spark.read.parquet(f"{SF}/documents.parquet").limit(120)
     words = (
-        docs.select(
-            F.explode(F.split(F.lower("text"), "[^a-z]+")).alias("word")
-        )
+        docs.select(F.explode(F.split(F.lower("text"), "[^a-z]+")).alias("word"))
         .where(F.length("word") >= 2)
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    fast = [
-        tuple(r)
-        for r in learn_bpe_merges(spark, words, 12).orderBy("step").collect()
-    ]
-    dist = [
-        tuple(r)
-        for r in learn_bpe_merges(
-            spark, words, 12, driver_vocab_budget=0
-        )
-        .orderBy("step")
-        .collect()
-    ]
-    assert fast == dist and len(fast) == 12
+    merges = learn_bpe_merges(spark, words, 12).orderBy("step").collect()
+    assert len(merges) == 12
+    return [tuple(r) for r in merges]
 
 
-def test_small_write_store_equals_spark_write(spark, tmp_path, monkeypatch):
-    """The budget-guarded driver-side partitioned writer (r13, §6)
-    produces a store Spark reads IDENTICALLY to the distributed write:
-    same rows, same column types, same partition values — across build,
-    upsert (append) and compaction (dynamic overwrite)."""
-    from flink_quickstart_spark.operators import maintenance as mnt
-    from flink_quickstart_spark.operators.dedup import (
-        minhash_build_store,
-        minhash_upsert_store,
-    )
-    from flink_quickstart_spark.operators.maintenance import (
-        compact_minhash_store,
-        read_store,
-    )
-
+def _store_case(spark, path, epoch_partitioned=False):
+    """Build, upsert, delete, compact; returns what a reader sees."""
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    b0 = docs.where(F.col("doc_id") % 2 == 0)
-    b1 = docs.where(F.col("doc_id") % 2 == 1)
-    small, big = str(tmp_path / "s"), str(tmp_path / "b")
-
-    def lifecycle(path, budget):
-        monkeypatch.setattr(mnt, "_SMALL_WRITE_ROWS", budget)
-        minhash_build_store(b0, path)
-        minhash_upsert_store(spark, path, b1)
-        compact_minhash_store(spark, path)
-
-    lifecycle(small, 10**9)  # driver-side writer path
-    lifecycle(big, 0)  # distributed Spark writes
-
-    a, b = read_store(spark, small, "bands"), read_store(spark, big, "bands")
-    assert [(f.name, f.dataType) for f in a.schema] == [
-        (f.name, f.dataType) for f in b.schema
-    ]
-    ra = sorted(map(tuple, a.collect()))
-    rb = sorted(map(tuple, b.collect()))
-    assert ra == rb and len(ra) > 0
-    # compaction left one file per partition on the driver path too
-    from flink_quickstart_spark.operators.maintenance import (
-        data_file_counts,
-        store_data_dir,
+    path = str(path)
+    minhash_build_store(
+        docs.where(F.col("doc_id") % 2 == 0), path,
+        epoch_partitioned=epoch_partitioned,
     )
+    minhash_upsert_store(
+        spark, path, docs.where(F.col("doc_id") % 2 == 1),
+        epoch=1 if epoch_partitioned else None,
+    )
+    minhash_delete_store(spark, path, docs.where(F.col("doc_id") % 5 == 0))
+    compact_minhash_store(spark, path)
+    bands = read_store(spark, path, "bands")
+    files = set(data_file_counts(store_data_dir(path, "bands")).values())
+    assert files == {1}  # compaction left one file per partition
+    rows = _rows(bands)
+    assert rows
+    return [(f.name, f.dataType) for f in bands.schema], rows
 
-    assert set(data_file_counts(store_data_dir(small, "bands")).values()) == {
-        1
-    }
+
+_FAST_PATH_CASES = {
+    "pagerank": ("pagerank", _pagerank_case),
+    "connected_components": ("connected_components", _components_case),
+    "bpe": ("bpe", _bpe_case),
+    "store": ("store_write", _store_case),
+    "store_epoch": ("store_write", partial(_store_case, epoch_partitioned=True)),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_FAST_PATH_CASES))
+def test_driver_fast_path_matches_distributed(
+    spark, tmp_path, monkeypatch, caplog, case
+):
+    """Each DRIVER_BUDGETS site returns the same output with the table
+    as-is (driver path, checked in the decision log) and with every
+    budget at 0 (distributed path). PageRank agrees to well inside the
+    key's round-6 output precision (summation order differs)."""
+    site, run = _FAST_PATH_CASES[case]
+    caplog.set_level(logging.DEBUG, logger="flink_quickstart_spark.session")
+
+    def paths_taken():
+        paths = {r.args[3] for r in caplog.records if r.args[0] == site}
+        caplog.clear()
+        return paths
+
+    fast = run(spark, tmp_path / "fast")
+    assert "driver" in paths_taken()
+    for name in DRIVER_BUDGETS:
+        monkeypatch.setitem(DRIVER_BUDGETS, name, 0)
+    dist = run(spark, tmp_path / "dist")
+    assert paths_taken() == {"distributed"}
+    assert fast == (pytest.approx(dist, abs=1e-12) if case == "pagerank" else dist)
+    assert fast
+
+
+def test_budget_zero_means_never(monkeypatch):
+    assert fits_driver("store_write", 0)
+    assert not fits_driver("store_write", None)
+    assert not fits_driver("store_write", DRIVER_BUDGETS["store_write"] + 1)
+    monkeypatch.setitem(DRIVER_BUDGETS, "store_write", 0)
+    assert not fits_driver("store_write", 0)
+
+
+def test_compaction_write_failure_keeps_store(spark, tmp_path, monkeypatch):
+    """A driver-side compaction whose partition writer fails on the
+    second partition raises, and the published store keeps its full
+    row multiset: the staged generation is aborted, and nothing is
+    rewritten from a half-mutated directory."""
+    import pyarrow.parquet as pq
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").limit(60)
+    path = str(tmp_path / "store")
+    minhash_build_store(docs.where(F.col("doc_id") % 2 == 0), path, hmod=8)
+    minhash_upsert_store(spark, path, docs.where(F.col("doc_id") % 2 == 1))
+    before = _rows(read_store(spark, path, "bands"))
+    real_write, calls = pq.write_table, []
+
+    def failing_write(*args, **kwargs):
+        calls.append(args[1])
+        if len(calls) == 2:
+            raise OSError("injected partition write failure")
+        return real_write(*args, **kwargs)
+
+    monkeypatch.setattr(pq, "write_table", failing_write)
+    with pytest.raises(OSError, match="injected"):
+        compact_minhash_store(spark, path)
+    monkeypatch.undo()
+    assert before and _rows(read_store(spark, path, "bands")) == before
+
+
+def test_spread_if_narrow_runs_no_job(spark):
+    """Probing a joined input only plans it: under AQE, touching
+    ``.rdd`` would run the join's broadcast stage."""
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    ids = spark.range(50).withColumnRenamed("id", "doc_id")
+    joined = docs.join(F.broadcast(ids), "doc_id", "left_semi")
+    sc = spark.sparkContext
+    sc.setJobGroup("spread-probe", "spread probe")
+    try:
+        spread = [_spread_if_narrow(df) for df in (joined, docs)]
+        assert _jobs_in_group(spark, "spread-probe") == 0
+    finally:
+        sc.setJobGroup(None, None)
+    # one-row-group fixture: both inputs are spread to the parallelism
+    n = sc.defaultParallelism
+    assert [df.rdd.getNumPartitions() for df in spread] == [n, n]
+
+
+def test_adc_scan_coalesce_prefix_matches_whole_dir(spark, monkeypatch):
+    """``cluster_id=3`` counts its own bytes, not ``cluster_id=30``'s."""
+    from flink_quickstart_spark.operators import quantization
+
+    mb = 1024 * 1024
+    manifest = {"files": [
+        {"path": os.path.join("codes", f"cluster_id={c}", "f.parquet"), "bytes": b}
+        for c, b in ((3, mb), (30, 9 * mb), (31, 9 * mb))
+    ]}
+    monkeypatch.setattr(
+        quantization, "StoreSnapshot", lambda _: SimpleNamespace(manifest=manifest)
+    )
+    df = spark.range(100).repartition(8)
+    out = quantization._adc_scan_coalesce(df, "-", prefixes=["cluster_id=3"])
+    assert out.rdd.getNumPartitions() == 1  # 1 MB → one 4 MB partition
+
+
+def test_lsh_ann_buckets_threshold_is_strict(spark):
+    """A pair at exactly the threshold distance is dropped, as in
+    pyspark.ml's approxSimilarityJoin (``dist < threshold``)."""
+    from pyspark.ml.feature import BucketedRandomProjectionLSH
+    from pyspark.ml.functions import array_to_vector
+
+    from flink_quickstart_spark.operators.similarity import lsh_ann_buckets
+
+    # distances: (0,1) exactly 5.0, (0,2) 1.0, (1,2) √18; 3 is far
+    vecs = [[1000.0, 1000.0], [1003.0, 1004.0], [1000.0, 1001.0], [-1000.0, 500.0]]
+    df = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id long, embedding array<double>"
+    )
+    kw = dict(bucket_length=1e9, num_tables=4, seed=42)
+
+    def ours(threshold):
+        out = lsh_ann_buckets(df, threshold=threshold, **kw).collect()
+        return sorted((r.d1, r.d2) for r in out)
+
+    feat = df.select("vec_id", array_to_vector("embedding").alias("features"))
+    model = BucketedRandomProjectionLSH(
+        inputCol="features", outputCol="hashes", bucketLength=1e9,
+        numHashTables=4, seed=42,
+    ).fit(feat)
+    ml = sorted(
+        (r.datasetA.vec_id, r.datasetB.vec_id)
+        for r in model.approxSimilarityJoin(feat, feat, 5.0).collect()
+        if r.datasetA.vec_id < r.datasetB.vec_id
+    )
+    assert ours(5.0) == ml == [(0, 2), (1, 2)]
+    assert (0, 1) in ours(5.0 + 1e-9)  # the pair is an LSH candidate
 
 
 @pytest.mark.parametrize("family", ["md5_60", "xx64"])
