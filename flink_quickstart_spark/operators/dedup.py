@@ -21,8 +21,6 @@ import os
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from flink_quickstart_spark.session import DRIVER_BUDGETS
-
 
 def exact_dedup(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
     """K1: group identical content by sha256; keep the lowest id as the
@@ -529,15 +527,6 @@ def _minhash_band_rows(
     return hashed.groupBy(id_col, "hash_idx").agg(F.min("h").alias("sig"))
 
 
-def _band_rows_bound(docs: DataFrame, num_hashes: int) -> int:
-    """Upper bound on the band rows ``docs`` hash to (≤ ``num_hashes``
-    per document), for the store writer's budget check. The count stops
-    one document past the budget, so an over-budget input costs a
-    bounded probe instead of a run of the caller's whole plan."""
-    cap = DRIVER_BUDGETS["store_write"] // int(num_hashes) + 1
-    return docs.limit(cap).count() * int(num_hashes)
-
-
 def minhash_build_store(
     df: DataFrame,
     path: str,
@@ -581,6 +570,7 @@ def minhash_build_store(
     (operators/maintenance.compact_minhash_store)."""
     from flink_quickstart_spark.operators.maintenance import (
         reset_store_generations,
+        row_bound,
         write_partitioned,
         write_store_manifest,
     )
@@ -601,7 +591,7 @@ def minhash_build_store(
         part_cols = ["_hmod", "_epoch"]
     write_partitioned(
         bands, f"{path}/bands", part_cols, ["band_id", "sig"], "overwrite",
-        n_rows=_band_rows_bound(df, num_hashes),
+        n_rows=row_bound(df, num_hashes),
     )
     spark.createDataFrame(
         [
@@ -662,6 +652,7 @@ def minhash_upsert_store(
     torn batch — operators/maintenance.store_generation)."""
     from flink_quickstart_spark.operators.maintenance import (
         read_store_rows,
+        row_bound,
         store_generation,
         write_partitioned,
     )
@@ -695,19 +686,14 @@ def minhash_upsert_store(
             "sig",
             F.pmod(F.col("sig"), F.lit(meta.hmod)).cast("int").alias("_hmod"),
         )
-        dest = os.path.join(gen, "bands")
+        part_cols, mode = ["_hmod"], "append"
         if is_epoch:
-            # the epoch write keeps the distributed path (n_rows unknown)
-            write_partitioned(
-                bands.withColumn("_epoch", F.lit(int(epoch)).cast("int")),
-                dest, ["_hmod", "_epoch"], ["band_id", "sig"], "dynamic",
-                n_rows=None,
-            )
-        else:
-            write_partitioned(
-                bands, dest, ["_hmod"], ["band_id", "sig"], "append",
-                n_rows=_band_rows_bound(new_docs, meta.num_hashes),
-            )
+            bands = bands.withColumn("_epoch", F.lit(int(epoch)).cast("int"))
+            part_cols, mode = ["_hmod", "_epoch"], "dynamic"
+        write_partitioned(
+            bands, os.path.join(gen, "bands"), part_cols, ["band_id", "sig"],
+            mode, n_rows=row_bound(new_docs, meta.num_hashes),
+        )
 
 
 def ensure_minhash_store(
@@ -733,107 +719,42 @@ def minhash_delete_store(
     text_col: str = "text",
 ) -> None:
     """INCREMENTAL deletion from a persisted signature store — the
-    retention counterpart of :func:`minhash_upsert_store`: re-hash the
-    deletion batch with the store's pinned family (its band rows live
-    in exactly the sig buckets that hashing computes — the signature is
-    a pure function of the text), anti-join the ids out of ONLY the
-    affected ``_hmod`` partitions (≤ num_hashes × batch buckets,
-    bounded by hmod), dynamically overwrite them, and drop partitions
-    left empty. ``del_docs`` carries (id, text) for the same reason the
+    retention counterpart of :func:`minhash_upsert_store`. Its locate
+    step re-hashes the deletion batch with the store's pinned family:
+    a document's band rows live in exactly the ``_hmod`` buckets that
+    hashing computes (the signature is a pure function of the text).
+    ``del_docs`` carries (id, text) for the same reason the
     vector deletes carry vectors: without the content, locating a doc's
-    band rows means scanning every partition. Cost ∝ batch +
-    touched-bucket occupancy. Invariant: delete(build(corpus), X) ==
-    build(corpus \\ X) row-identically. Publishes as an atomic
-    generation commit — a concurrent reader sees the pre- or
-    post-delete store, never a mix (LOCAL/DBFS-style paths only — the
-    generation clone and emptied-bucket drop are filesystem calls;
-    fail loudly on remote schemes; a warehouse deployment uses a table
-    format's snapshot commit). Handles both flat and epoch-partitioned
-    stores (the drop unit is then the (_hmod, _epoch) partition)."""
-    from flink_quickstart_spark.operators.maintenance import store_generation
-
-    with store_generation(path, "minhash_delete_store") as gen:
-        _minhash_delete_into(spark, path, gen, del_docs, id_col, text_col)
-
-
-def _minhash_delete_into(spark, path, gen, del_docs, id_col, text_col) -> None:
-    import shutil
-
+    band rows means scanning every partition. Invariant:
+    delete(build(corpus), X) == build(corpus \\ X) row-identically.
+    Handles both flat and epoch-partitioned stores (the drop unit is
+    then the (_hmod, _epoch) partition). The protocol (lease, pruned
+    anti-join, emptied-partition drop, atomic publish; local paths
+    only) is :func:`~.maintenance.delete_partition_local`."""
     from flink_quickstart_spark.operators.maintenance import (
-        AbortStoreGeneration,
-        read_store,
+        _is_epoch_partitioned,
+        delete_partition_local,
         read_store_rows,
-        write_partitioned,
+        store_data_dir,
     )
 
-    meta = read_store_rows(path, "meta")[0]
-    family = getattr(meta, "hash_family", None) or "md5_60"
-    is_epoch = bool(getattr(meta, "epoch_partitioned", False))
-    part_cols = ["_hmod", "_epoch"] if is_epoch else ["_hmod"]
-    del_bands = (
-        _minhash_band_rows(
+    def locate():
+        meta = read_store_rows(path, "meta")[0]
+        family = getattr(meta, "hash_family", None) or "md5_60"
+        return _minhash_band_rows(
             del_docs, id_col, text_col, meta.num_hashes, meta.shingle_n, family
-        )
-        .select(
+        ).select(
             F.col(id_col),
             F.pmod(F.col("sig"), F.lit(meta.hmod)).cast("int").alias("_hmod"),
         )
-        .localCheckpoint(eager=True)
+
+    # the epoch layout is a build-time property (see compact_minhash_store)
+    epoch = _is_epoch_partitioned(store_data_dir(path, "bands"))
+    delete_partition_local(
+        spark, path, "minhash_delete_store", "bands",
+        ["_hmod", "_epoch"] if epoch else ["_hmod"], ["band_id", "sig"],
+        id_col, locate,
     )
-    try:
-        probed = [
-            int(r._hmod) for r in del_bands.select("_hmod").distinct().collect()
-        ]
-        if not probed:
-            raise AbortStoreGeneration  # empty batch — store untouched
-        pruned = read_store(spark, path, "bands").where(
-            F.col("_hmod").isin(probed)
-        )
-        # drop units actually present in the pruned scan (≤ hmod flat;
-        # ≤ hmod × live epochs on an epoch store — both driver-bounded)
-        combos = [
-            tuple(int(r[c]) for c in part_cols)
-            for r in pruned.select(*part_cols).distinct().collect()
-        ]
-        survivors = (
-            pruned.join(
-                del_bands.select(F.col(id_col).alias("_del_id")).distinct(),
-                F.col(id_col) == F.col("_del_id"),
-                "left_anti",
-            )
-            .select(id_col, "band_id", "sig", *part_cols)
-            .localCheckpoint(eager=True)
-        )
-        try:
-            # the survivor set is touched-bucket-bounded and already
-            # materialized (localCheckpoint) — counting it is a cache scan
-            write_partitioned(
-                survivors, os.path.join(gen, "bands"), part_cols,
-                ["band_id", "sig"], "dynamic", n_rows=survivors.count(),
-            )
-            surviving = {
-                tuple(int(r[c]) for c in part_cols)
-                for r in survivors.select(*part_cols).distinct().collect()
-            }
-            # a fully-deleted partition writes nothing under dynamic
-            # overwrite — drop its stale directory explicitly
-            for combo in combos:
-                if combo in surviving:
-                    continue
-                d = os.path.join(
-                    gen, "bands",
-                    *(f"{n}={v}" for n, v in zip(part_cols, combo)),
-                )
-                if os.path.isdir(d):
-                    shutil.rmtree(d)
-        finally:
-            from flink_quickstart_spark.operators.iterative import _release
-
-            _release(survivors)
-    finally:
-        from flink_quickstart_spark.operators.iterative import _release
-
-        _release(del_bands)
 
 
 def minhash_ingest_neardup(

@@ -616,7 +616,7 @@ def _write_and_drop(
     files, the bug _drop_empty_partitions exists for). ``path`` is the
     write TARGET root — the staged generation dir under the r11
     discipline, never the live store."""
-    from flink_quickstart_spark.operators.similarity import _drop_empty_partitions
+    from flink_quickstart_spark.operators.maintenance import _drop_empty_partitions
 
     survivors = survivors.localCheckpoint(eager=True)
     try:

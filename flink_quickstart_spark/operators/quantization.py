@@ -43,19 +43,27 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from flink_quickstart_spark.operators.maintenance import (
-    AbortStoreGeneration,
     StoreSnapshot,
-    current_store_root,
+    delete_partition_local,
+    open_store_snapshot,
     reset_store_generations,
     read_store,
     read_store_rows,
+    row_bound,
     store_data_dir,
     store_generation,
+    write_partitioned,
     write_store_manifest,
 )
 from flink_quickstart_spark.operators.similarity import (
     DEFAULT_BROADCAST_BUDGET_BYTES,
+    _assign_members_df,
+    _cluster_occupancy,
     _collect_corpus,
+    _retrain_drift,
+    _train_centroids,
+    _write_centroids,
+    load_centroids,
 )
 
 
@@ -312,25 +320,14 @@ def pq_build_index(
         books = pq_train_codebooks(
             df, id_col, vec_col, m=m, k=k, sample_rows=sample_rows, seed=seed
         )
-    (
+    write_partitioned(
         _with_idmod(
             pq_encode_df(df, books, id_col, vec_col, rotation=rot),
             id_col, id_buckets,
-        )
-        .repartition("_idmod")
-        .sortWithinPartitions("_idmod", id_col)
-        .write.mode("overwrite")
-        .partitionBy("_idmod")
-        .parquet(f"{path}/codes")
+        ),
+        f"{path}/codes", ["_idmod"], [id_col], "overwrite", n_rows=row_bound(df, 1),
     )
-    rows = [
-        (int(s), int(c), [float(x) for x in books[s, c]])
-        for s in range(books.shape[0])
-        for c in range(books.shape[1])
-    ]
-    spark.createDataFrame(
-        rows, "subspace int, code int, centroid array<double>"
-    ).write.mode("overwrite").parquet(f"{path}/codebooks")
+    _write_codebooks(spark, books, f"{path}/codebooks")
     if rot is not None:
         spark.createDataFrame(
             [(int(i), [float(x) for x in rot[i]]) for i in range(len(rot))],
@@ -366,14 +363,13 @@ def pq_upsert_index(
         books = load_codebooks(spark, path)
         rot = load_rotation(spark, path)
         buckets = _pq_bucket_count(spark, path)
-        (
+        write_partitioned(
             _with_idmod(
                 pq_encode_df(new_df, books, id_col, vec_col, rotation=rot),
                 id_col, buckets,
-            )
-            .write.mode("append")
-            .partitionBy("_idmod")
-            .parquet(os.path.join(gen, "codes"))
+            ),
+            os.path.join(gen, "codes"), ["_idmod"], [id_col], "append",
+            n_rows=row_bound(new_df, 1),
         )
 
 
@@ -401,63 +397,31 @@ def pq_delete_index(
     del_df: DataFrame,
     id_col: str = "vec_id",
 ) -> None:
-    """INCREMENTAL deletion from a persisted flat-PQ store: the batch's
-    ``_idmod`` buckets are a pure function of the IDS (no vector
-    payload needed — the forget cascade passes the same id frame it
-    audits with), so the scan prunes to those buckets, anti-joins the
-    ids out, dynamic-overwrites them in the staged generation, and
-    drops buckets left empty. Cost ∝ batch + touched-bucket occupancy.
-    Publishes as an atomic generation commit."""
-    from flink_quickstart_spark.operators.iterative import _release
-    from flink_quickstart_spark.operators.similarity import (
-        _drop_empty_partitions,
+    """INCREMENTAL deletion from a persisted flat-PQ store. Its locate
+    step is the ``_idmod`` id hash — a pure function of the IDS, so no
+    vector payload is needed (the forget cascade passes the same id
+    frame it audits with). The protocol (lease, pruned anti-join,
+    emptied-partition drop, atomic publish; local paths only) is
+    :func:`~.maintenance.delete_partition_local`."""
+    delete_partition_local(
+        spark, path, "pq_delete_index", "codes", ["_idmod"], [id_col], id_col,
+        lambda: _with_idmod(
+            del_df.select(id_col).distinct(), id_col, _pq_bucket_count(spark, path)
+        ),
     )
 
-    with store_generation(path, "pq_delete_index") as gen:
-        buckets_n = _pq_bucket_count(spark, path)
-        del_ids = (
-            _with_idmod(del_df.select(id_col).distinct(), id_col, buckets_n)
-            .localCheckpoint(eager=True)
-        )
-        try:
-            probed = [
-                int(r._idmod)
-                for r in del_ids.select("_idmod").distinct().collect()
-            ]
-            if not probed:
-                raise AbortStoreGeneration  # empty batch — store untouched
-            survivors = (
-                read_store(spark, path, "codes")
-                .where(F.col("_idmod").isin(probed))
-                .join(
-                    del_ids.select(F.col(id_col).alias("_del_id")),
-                    F.col(id_col) == F.col("_del_id"),
-                    "left_anti",
-                )
-                .select(id_col, "codes", "_idmod")
-                .localCheckpoint(eager=True)
-            )
-            try:
-                (
-                    survivors.write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("_idmod")
-                    .parquet(os.path.join(gen, "codes"))
-                )
-                surviving = {
-                    (int(r._idmod),)
-                    for r in survivors.select("_idmod").distinct().collect()
-                }
-                _drop_empty_partitions(
-                    os.path.join(gen, "codes"),
-                    [(b,) for b in probed],
-                    surviving,
-                    ["_idmod"],
-                )
-            finally:
-                _release(survivors)
-        finally:
-            _release(del_ids)
+
+def _write_codebooks(spark, books: np.ndarray, dest: str) -> None:
+    """Write the (subspace, code, centroid) codebook table that
+    :func:`load_codebooks` reads — m×k driver-sized rows."""
+    spark.createDataFrame(
+        [
+            (int(s), int(c), [float(x) for x in books[s, c]])
+            for s in range(books.shape[0])
+            for c in range(books.shape[1])
+        ],
+        "subspace int, code int, centroid array<double>",
+    ).write.mode("overwrite").parquet(dest)
 
 
 def load_codebooks(spark, path: str) -> np.ndarray:
@@ -852,7 +816,7 @@ def _ivfpq_encode_df(
 def _store_extra_cols(spark, path: str, id_col: str) -> tuple[str, ...]:
     """The metadata columns a codes store carries (everything beyond
     id/codes/cluster_id and the flat store's ``_idmod`` bucket) — read
-    from the store's own schema so upsert, delete and retrain stay
+    from the store's own schema so upsert and retrain stay
     schema-faithful without the caller re-declaring them."""
     cols = read_store(spark, path, "codes").columns
     return tuple(
@@ -890,8 +854,6 @@ def ivfpq_build_index(
     Training is the shared bounded-deterministic-sample discipline:
     centroids via :func:`~.similarity._train_centroids`, then residual
     codebooks on the SAME sample's assignment residuals."""
-    from flink_quickstart_spark.operators.similarity import _train_centroids
-
     reset_store_generations(path)  # rebuild over a mutated store
     spark = df.sparkSession
     centroids = _train_centroids(
@@ -906,24 +868,16 @@ def ivfpq_build_index(
     books = _train_subspace_codebooks(
         resid, m, k, seed, pq_iters, "ivfpq_build_index"
     )
+    # unshuffled corpus write: repartition(cluster_id) would cap it at
+    # n_clusters tasks
     (
         _ivfpq_encode_df(df, centroids, books, id_col, vec_col, extra_cols)
         .write.mode("overwrite")
         .partitionBy("cluster_id")
         .parquet(f"{path}/codes")
     )
-    spark.createDataFrame(
-        [(int(i), [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "cluster_id int, centroid array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
-    rows = [
-        (int(s), int(c), [float(x) for x in books[s, c]])
-        for s in range(books.shape[0])
-        for c in range(books.shape[1])
-    ]
-    spark.createDataFrame(
-        rows, "subspace int, code int, centroid array<double>"
-    ).write.mode("overwrite").parquet(f"{path}/codebooks")
+    _write_centroids(spark, centroids, f"{path}/centroids")
+    _write_codebooks(spark, books, f"{path}/codebooks")
     write_store_manifest(path)  # stamp generation 0's file list (r12)
 
 
@@ -931,11 +885,7 @@ def load_ivfpq_artifacts(spark, path: str) -> tuple[np.ndarray, np.ndarray]:
     """(centroids, codebooks) from a persisted IVFPQ store — two
     driver-sized reads (n_clusters + m×k rows), the everything a query
     or maintenance session needs besides the codes scan."""
-    cent_rows = read_store_rows(path, "centroids")
-    cents = np.zeros((len(cent_rows), len(cent_rows[0].centroid)))
-    for r in cent_rows:
-        cents[r.cluster_id] = r.centroid
-    return cents, load_codebooks(spark, path)
+    return load_centroids(open_store_snapshot(path)), load_codebooks(spark, path)
 
 
 def ivfpq_query_index(
@@ -1066,11 +1016,10 @@ def ivfpq_upsert_index(
     with store_generation(path, "ivfpq_upsert_index") as gen:
         cents, books = load_ivfpq_artifacts(spark, path)
         extras = _store_extra_cols(spark, path, id_col)
-        (
-            _ivfpq_encode_df(new_df, cents, books, id_col, vec_col, extras)
-            .write.mode("append")
-            .partitionBy("cluster_id")
-            .parquet(os.path.join(gen, "codes"))
+        write_partitioned(
+            _ivfpq_encode_df(new_df, cents, books, id_col, vec_col, extras),
+            os.path.join(gen, "codes"), ["cluster_id"], [id_col], "append",
+            n_rows=row_bound(new_df, 1),
         )
 
 
@@ -1081,69 +1030,20 @@ def ivfpq_delete_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """INCREMENTAL deletion from a persisted IVFPQ store: assign the
-    deletion batch against the STORED centroids (deterministic, so each
-    row's cluster is exactly where its codes were written), anti-join
-    the ids out of ONLY the affected cluster partitions (dynamic
-    overwrite), and drop clusters left empty — dynamic overwrite alone
-    would keep their stale files (the
-    :func:`~.similarity._drop_empty_partitions` lesson). ``del_df``
-    carries (id, vector) because the cluster is a function of the
-    vector. Cost ∝ batch + touched-cluster occupancy. Publishes as an
-    atomic generation commit — a concurrent reader sees the pre- or
-    post-delete store, never a mix (local/DBFS-style paths only: the
-    generation clone and emptied-partition drop are filesystem calls)."""
-    from flink_quickstart_spark.operators.similarity import (
-        _assign_members_df,
-        _drop_empty_partitions,
+    """INCREMENTAL deletion from a persisted IVFPQ store. Its locate
+    step assigns the deletion batch against the STORED centroids
+    (deterministic, so each row's cluster is exactly where its codes
+    were written); ``del_df`` carries (id, vector) because the cluster
+    is a function of the vector. The protocol (lease, pruned
+    anti-join, emptied-partition drop, atomic publish; local paths
+    only) is :func:`~.maintenance.delete_partition_local`."""
+    delete_partition_local(
+        spark, path, "ivfpq_delete_index", "codes", ["cluster_id"], [id_col],
+        id_col,
+        lambda: _assign_members_df(
+            del_df, load_centroids(open_store_snapshot(path)), id_col, vec_col
+        ),
     )
-    from flink_quickstart_spark.operators.iterative import _release
-
-    with store_generation(path, "ivfpq_delete_index") as gen:
-        cents, _books = load_ivfpq_artifacts(spark, path)
-        assigned = _assign_members_df(
-            del_df, cents, id_col, vec_col
-        ).localCheckpoint(eager=True)
-        try:
-            clusters = [
-                int(r.cluster_id)
-                for r in assigned.select("cluster_id").distinct().collect()
-            ]
-            if not clusters:
-                raise AbortStoreGeneration  # empty batch — store untouched
-            extras = _store_extra_cols(spark, path, id_col)
-            survivors = (
-                read_store(spark, path, "codes")
-                .where(F.col("cluster_id").isin(clusters))
-                .join(
-                    assigned.select(F.col(id_col).alias("_del_id")).distinct(),
-                    F.col(id_col) == F.col("_del_id"),
-                    "left_anti",
-                )
-                .select(id_col, "codes", *extras, "cluster_id")
-                .localCheckpoint(eager=True)
-            )
-            try:
-                (
-                    survivors.write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("cluster_id")
-                    .parquet(os.path.join(gen, "codes"))
-                )
-                surviving = {
-                    (int(r.cluster_id),)
-                    for r in survivors.select("cluster_id").distinct().collect()
-                }
-                _drop_empty_partitions(
-                    os.path.join(gen, "codes"),
-                    [(c,) for c in clusters],
-                    surviving,
-                    ["cluster_id"],
-                )
-            finally:
-                _release(survivors)
-        finally:
-            _release(assigned)
 
 
 def ivfpq_retrain_index(
@@ -1193,8 +1093,6 @@ def ivfpq_retrain_index(
     FRESH :func:`ivfpq_build_index` on base ∪ batch with the same seed.
     Atomic generation commit (single-writer via the store lease; local
     paths — the publish is a pointer flip)."""
-    from flink_quickstart_spark.operators.similarity import _train_centroids
-
     with store_generation(
         path,
         "ivfpq_retrain_index",
@@ -1205,13 +1103,7 @@ def ivfpq_retrain_index(
         mm = m if m is not None else old_books.shape[0]
         kk = k if k is not None else old_books.shape[1]
 
-        occ_rows = (
-            read_store(spark, path, "codes")
-            .groupBy("cluster_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        occ_before = {int(r.cluster_id): int(r.n) for r in occ_rows}
+        occ_before = _cluster_occupancy(read_store(spark, path, "codes"))
         n_stored = sum(occ_before.values())
         n_corpus = corpus.count()
         if n_corpus != n_stored:
@@ -1241,7 +1133,8 @@ def ivfpq_retrain_index(
         # all three subdirs are replaced, so they are written fresh into
         # the staged generation (replace_subdirs skipped the clone) —
         # the former staging/trash rename dance is subsumed by the
-        # atomic generation publish
+        # atomic generation publish. Unshuffled corpus write:
+        # repartition(cluster_id) would cap it at n_clusters tasks.
         extras = _store_extra_cols(spark, path, id_col)
         (
             _ivfpq_encode_df(
@@ -1251,42 +1144,16 @@ def ivfpq_retrain_index(
             .partitionBy("cluster_id")
             .parquet(os.path.join(gen, "codes"))
         )
-        spark.createDataFrame(
-            [(int(i), [float(x) for x in c]) for i, c in enumerate(new_cents)],
-            "cluster_id int, centroid array<double>",
-        ).write.mode("overwrite").parquet(os.path.join(gen, "centroids"))
-        spark.createDataFrame(
-            [
-                (int(s), int(c), [float(x) for x in new_books[s, c]])
-                for s in range(new_books.shape[0])
-                for c in range(new_books.shape[1])
-            ],
-            "subspace int, code int, centroid array<double>",
-        ).write.mode("overwrite").parquet(os.path.join(gen, "codebooks"))
+        _write_centroids(spark, new_cents, os.path.join(gen, "centroids"))
+        _write_codebooks(spark, new_books, os.path.join(gen, "codebooks"))
 
-        occ_after = {
-            int(r.cluster_id): int(r.n)
-            for r in spark.read.parquet(os.path.join(gen, "codes"))
-            .groupBy("cluster_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        sims = old_cents @ new_cents.T
-        shift = 1.0 - sims.max(axis=1)
-
-        def _skew(occ: dict[int, int]) -> float:
-            if not occ:
-                return 0.0
-            vals = list(occ.values())
-            return max(vals) / (sum(vals) / len(vals))
-
+        occ_after = _cluster_occupancy(
+            spark.read.parquet(os.path.join(gen, "codes"))
+        )
         return {
             "n_clusters": int(len(new_cents)),
             "n_codes": int(sum(occ_after.values())),
-            "centroid_shift_mean": float(np.round(shift.mean(), 6)),
-            "centroid_shift_max": float(np.round(shift.max(), 6)),
-            "occupancy_skew_before": float(np.round(_skew(occ_before), 4)),
-            "occupancy_skew_after": float(np.round(_skew(occ_after), 4)),
+            **_retrain_drift(old_cents, new_cents, occ_before, occ_after),
         }
 
 

@@ -26,12 +26,19 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from flink_quickstart_spark.operators.maintenance import (
+    MAX_AFFECTED_COMBOS,
     AbortStoreGeneration,
+    _collect_combos_budgeted,
+    _partition_files,
+    _partition_rel,
+    delete_partition_local,
     open_store_snapshot,
+    partition_filter,
     read_store,
-    read_store_rows,
+    row_bound,
     store_data_dir,
     store_generation,
+    write_partitioned,
 )
 
 #: Default ceiling for the broadcast-corpus tiers (bytes). Spark's own
@@ -513,15 +520,11 @@ def ivf_upsert_index(
     store lease; readers see the pre- or post-upsert index, never a
     torn batch — operators/maintenance.store_generation)."""
     with store_generation(path, "ivf_upsert_index") as gen:
-        cent_rows = read_store_rows(path, "centroids")
-        cents = np.zeros((len(cent_rows), len(cent_rows[0].centroid)))
-        for r in cent_rows:
-            cents[r.cluster_id] = r.centroid
-        (
-            _assign_members_df(new_df, cents, id_col, vec_col)
-            .write.mode("append")
-            .partitionBy("cluster_id")
-            .parquet(os.path.join(gen, "members"))
+        cents = load_centroids(open_store_snapshot(path))
+        write_partitioned(
+            _assign_members_df(new_df, cents, id_col, vec_col),
+            os.path.join(gen, "members"), ["cluster_id"], [id_col], "append",
+            n_rows=row_bound(new_df, 1),
         )
 
 
@@ -533,79 +536,78 @@ def ivf_delete_index(
     vec_col: str = "embedding",
 ) -> None:
     """INCREMENTAL deletion from a persisted IVF index — the retention
-    counterpart of :func:`ivf_upsert_index`: assign the deletion batch
-    against the STORED centroids (deterministic, so each row's cluster
-    is exactly where it was written), anti-join the ids out of ONLY the
-    affected cluster partitions (dynamic overwrite), and drop clusters
-    left empty (:func:`_drop_empty_partitions`). ``del_df`` carries
-    (id, vector) for the same reason as LSH delete: the cluster is a
-    function of the vector. Cost ∝ batch + touched-cluster occupancy.
-    Invariant: members == same-centroid assignment of corpus \\ batch.
-    Publishes as an atomic generation commit — a concurrent reader sees
-    the pre- or post-delete index, never a mix (local paths only; the
-    generation clone and emptied-cluster drop are filesystem calls)."""
-    with store_generation(path, "ivf_delete_index") as gen:
-        _ivf_delete_into(spark, path, gen, del_df, id_col, vec_col)
-
-
-def _ivf_delete_into(spark, path, gen, del_df, id_col, vec_col) -> None:
-    """Reads come from the CURRENT generation (store_data_dir — the
-    pointer is unflipped while staging), writes land in the staged
-    ``gen``. The survivor checkpoint remains as a single-materialization
-    optimization (it feeds both the write and the surviving-set
-    collect), not a correctness requirement."""
-    import numpy as _np
-
-    cent_rows = read_store_rows(path, "centroids")
-    cents = _np.zeros((len(cent_rows), len(cent_rows[0].centroid)))
-    for r in cent_rows:
-        cents[r.cluster_id] = r.centroid
-    assigned = _assign_members_df(del_df, cents, id_col, vec_col).localCheckpoint(
-        eager=True
+    counterpart of :func:`ivf_upsert_index`. Its locate step assigns
+    the deletion batch against the STORED centroids (deterministic, so
+    each row's cluster is exactly where it was written); ``del_df``
+    carries (id, vector) because the cluster is a function of the
+    vector. Invariant: members == same-centroid assignment of corpus \\
+    batch. The protocol (lease, pruned anti-join, emptied-partition
+    drop, atomic publish; local paths only) is
+    :func:`~.maintenance.delete_partition_local`."""
+    delete_partition_local(
+        spark, path, "ivf_delete_index", "members", ["cluster_id"], [id_col],
+        id_col,
+        lambda: _assign_members_df(
+            del_df, load_centroids(open_store_snapshot(path)), id_col, vec_col
+        ),
     )
-    try:
-        clusters = [
-            int(r.cluster_id)
-            for r in assigned.select("cluster_id").distinct().collect()
-        ]
-        if not clusters:
-            raise AbortStoreGeneration
-        survivors = (
-            read_store(spark, path, "members")
-            .where(F.col("cluster_id").isin(clusters))
-            .join(
-                assigned.select(F.col(id_col).alias("_del_id")).distinct(),
-                F.col(id_col) == F.col("_del_id"),
-                "left_anti",
-            )
-            .select(id_col, vec_col, "cluster_id")
-            .localCheckpoint(eager=True)
-        )
-        try:
-            (
-                survivors.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("cluster_id")
-                .parquet(os.path.join(gen, "members"))
-            )
-            surviving = {
-                (int(r.cluster_id),)
-                for r in survivors.select("cluster_id").distinct().collect()
-            }
-            _drop_empty_partitions(
-                os.path.join(gen, "members"),
-                [(c,) for c in clusters],
-                surviving,
-                ["cluster_id"],
-            )
-        finally:
-            from flink_quickstart_spark.operators.iterative import _release
 
-            _release(survivors)
-    finally:
-        from flink_quickstart_spark.operators.iterative import _release
 
-        _release(assigned)
+def load_centroids(snap) -> np.ndarray:
+    """The (n_clusters, dim) centroid matrix of an IVF or IVFPQ store
+    snapshot (:class:`~.maintenance.StoreSnapshot`), row ``i`` =
+    ``cluster_id`` i — a driver-side pyarrow read, no Spark job."""
+    rows = snap.rows("centroids")
+    cents = np.zeros((len(rows), len(rows[0].centroid)))
+    for r in rows:
+        cents[r.cluster_id] = r.centroid
+    return cents
+
+
+def _write_centroids(spark, centroids: np.ndarray, dest: str) -> None:
+    """Write the centroid table (``cluster_id``, ``centroid``) that
+    :func:`load_centroids` reads."""
+    spark.createDataFrame(
+        [(int(i), [float(x) for x in c]) for i, c in enumerate(centroids)],
+        "cluster_id int, centroid array<double>",
+    ).write.mode("overwrite").parquet(dest)
+
+
+def _cluster_occupancy(df: DataFrame) -> dict[int, int]:
+    """Rows per ``cluster_id`` — one engine-side aggregate, an
+    O(n_clusters) driver result."""
+    return {
+        int(r.cluster_id): int(r.n)
+        for r in df.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+
+
+def _occupancy_skew(occ: dict[int, int]) -> float:
+    """max/mean cluster size (0.0 for an empty index)."""
+    if not occ:
+        return 0.0
+    vals = list(occ.values())
+    return max(vals) / (sum(vals) / len(vals))
+
+
+def _retrain_drift(
+    old_cents: np.ndarray,
+    new_cents: np.ndarray,
+    occ_before: dict[int, int],
+    occ_after: dict[int, int],
+) -> dict:
+    """The retrain drift report shared by the IVF and IVFPQ retrains:
+    each OLD centroid's cosine distance to the nearest NEW one (ids
+    permute across retrains; nearest-match is the stable comparison —
+    O(k²) driver numpy, k ≤ dozens by design) and the occupancy skew
+    before vs after."""
+    shift = 1.0 - (old_cents @ new_cents.T).max(axis=1)
+    return {
+        "centroid_shift_mean": float(np.round(shift.mean(), 6)),
+        "centroid_shift_max": float(np.round(shift.max(), 6)),
+        "occupancy_skew_before": float(np.round(_occupancy_skew(occ_before), 4)),
+        "occupancy_skew_after": float(np.round(_occupancy_skew(occ_after), 4)),
+    }
 
 
 def ivf_build_index(
@@ -639,16 +641,15 @@ def ivf_build_index(
     centroids = _train_centroids(
         df, id_col, vec_col, n_clusters, seed, kmeans_iters, sample_rows
     )
+    # unshuffled corpus write: repartition(cluster_id) would cap it at
+    # n_clusters tasks
     (
         _assign_members_df(df, centroids, id_col, vec_col)
         .write.mode("overwrite")
         .partitionBy("cluster_id")
         .parquet(f"{path}/members")
     )
-    spark.createDataFrame(
-        [(int(i), [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "cluster_id int, centroid array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
+    _write_centroids(spark, centroids, f"{path}/centroids")
     write_store_manifest(path)  # stamp generation 0's file list (r12)
 
 
@@ -680,19 +681,9 @@ def ivf_drift_stats(
     real drift (fresh ≈ low, post-drift ↑, post-retrain ↓) is pinned
     in tests/test_invariants_r10.py."""
     snap = open_store_snapshot(path)  # one resolve = one consistent snapshot
-    cent_rows = snap.rows("centroids")
-    cents = np.zeros((len(cent_rows), len(cent_rows[0].centroid)))
-    for r in cent_rows:
-        cents[r.cluster_id] = r.centroid
+    cents = load_centroids(snap)
     members = snap.read(spark, "members")
-    occ = {
-        int(r.cluster_id): int(r.n)
-        for r in members.groupBy("cluster_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    vals = list(occ.values())
-    skew = max(vals) / (sum(vals) / len(vals)) if vals else 0.0
+    occ = _cluster_occupancy(members)
     sample = (
         members.select(id_col, vec_col, "cluster_id")
         .orderBy(id_col)
@@ -704,9 +695,9 @@ def ivf_drift_stats(
     assigned = cents[sample["cluster_id"].to_numpy()]
     qerr = 1.0 - (v * assigned).sum(axis=1)
     return {
-        "n_clusters": len(cent_rows),
-        "n_members": int(sum(vals)),
-        "occupancy_skew": float(np.round(skew, 4)),
+        "n_clusters": len(cents),
+        "n_members": int(sum(occ.values())),
+        "occupancy_skew": float(np.round(_occupancy_skew(occ), 4)),
         "qerr_mean": float(np.round(qerr.mean(), 6)),
         "qerr_p95": float(np.round(np.percentile(qerr, 95), 6)),
     }
@@ -761,25 +752,12 @@ def ivf_retrain_index(
     with store_generation(
         path, "ivf_retrain_index", replace_subdirs=("members", "centroids")
     ) as gen:
-        old_cent_rows = spark.read.parquet(
-            store_data_dir(path, "centroids")
-        ).collect()
-        old_cents = np.zeros(
-            (len(old_cent_rows), len(old_cent_rows[0].centroid))
-        )
-        for r in old_cent_rows:
-            old_cents[r.cluster_id] = r.centroid
-        k = n_clusters if n_clusters is not None else len(old_cent_rows)
+        old_cents = load_centroids(open_store_snapshot(path))
+        k = n_clusters if n_clusters is not None else len(old_cents)
 
         members_dir = store_data_dir(path, "members")
         members = spark.read.parquet(members_dir).select(id_col, vec_col)
-        occ_before = {
-            int(r.cluster_id): int(r.n)
-            for r in spark.read.parquet(members_dir)
-            .groupBy("cluster_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
+        occ_before = _cluster_occupancy(spark.read.parquet(members_dir))
         new_cents = _train_centroids(
             members, id_col, vec_col, k, seed, kmeans_iters, sample_rows
         )
@@ -787,44 +765,23 @@ def ivf_retrain_index(
         # the retrain replaces BOTH subdirs, so they are written fresh
         # into the staged generation (replace_subdirs skipped the clone)
         # — the former staging/trash rename dance is subsumed by the
-        # generation publish
+        # generation publish. Unshuffled corpus write: repartition
+        # (cluster_id) would cap it at n_clusters tasks.
         reassigned = _assign_members_df(members, new_cents, id_col, vec_col)
         (
             reassigned.write.mode("overwrite")
             .partitionBy("cluster_id")
             .parquet(os.path.join(gen, "members"))
         )
-        spark.createDataFrame(
-            [(int(i), [float(x) for x in c]) for i, c in enumerate(new_cents)],
-            "cluster_id int, centroid array<double>",
-        ).write.mode("overwrite").parquet(os.path.join(gen, "centroids"))
+        _write_centroids(spark, new_cents, os.path.join(gen, "centroids"))
 
-        occ_after = {
-            int(r.cluster_id): int(r.n)
-            for r in spark.read.parquet(os.path.join(gen, "members"))
-            .groupBy("cluster_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        # drift: each OLD centroid's cosine distance to the nearest NEW
-        # one (ids permute across retrains; nearest-match is the stable
-        # comparison) — O(k²) driver numpy, k ≤ dozens by design
-        sims = old_cents @ new_cents.T
-        shift = 1.0 - sims.max(axis=1)
-
-        def _skew(occ: dict[int, int]) -> float:
-            if not occ:
-                return 0.0
-            vals = list(occ.values())
-            return max(vals) / (sum(vals) / len(vals))
-
+        occ_after = _cluster_occupancy(
+            spark.read.parquet(os.path.join(gen, "members"))
+        )
         return {
             "n_clusters": int(len(new_cents)),
             "n_members": int(sum(occ_after.values())),
-            "centroid_shift_mean": float(np.round(shift.mean(), 6)),
-            "centroid_shift_max": float(np.round(shift.max(), 6)),
-            "occupancy_skew_before": float(np.round(_skew(occ_before), 4)),
-            "occupancy_skew_after": float(np.round(_skew(occ_after), 4)),
+            **_retrain_drift(old_cents, new_cents, occ_before, occ_after),
         }
 
 
@@ -926,6 +883,30 @@ def _band_bucket_cols(vec_col: str, dirs: np.ndarray, bucket_length: float):
     return cols
 
 
+def _banded(
+    df: DataFrame, id_col: str, vec_col: str, dirs: np.ndarray, bucket_length: float
+) -> DataFrame:
+    """(id, vec, band_id, bucket): one row per vector × hash table."""
+    bands = _band_bucket_cols(vec_col, dirs, bucket_length)
+    return df.select(id_col, vec_col, F.explode(F.array(*bands)).alias("_bb")).select(
+        id_col,
+        vec_col,
+        F.col("_bb.band_id").alias("band_id"),
+        F.col("_bb.bucket").alias("bucket"),
+    )
+
+
+def _load_projections(snap) -> tuple[np.ndarray, float]:
+    """(directions, bucket_length) of an LSH index snapshot
+    (:class:`~.maintenance.StoreSnapshot`) — a driver-side pyarrow read
+    of the O(num_tables)-row projection table, no Spark job."""
+    rows = snap.rows("projections")
+    dirs = np.zeros((len(rows), len(rows[0].direction)))
+    for r in rows:
+        dirs[r.band_id] = r.direction
+    return dirs, float(rows[0].bucket_length)
+
+
 def _assign_pos(banded: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """Deterministic per-bucket posting positions over (id, vec, band_id,
     bucket) rows — the salt-sharded scheme documented on
@@ -1020,22 +1001,10 @@ def lsh_build_index(
     first = df.select(F.size(vec_col)).first()
     dim = int(first[0]) if first and first[0] is not None else 0
     dirs = _lsh_projections(dim, num_tables, seed)
-    bands = _band_bucket_cols(vec_col, dirs, bucket_length)
-    banded = df.select(
-        id_col, vec_col, F.explode(F.array(*bands)).alias("_bb")
-    ).select(
-        id_col,
-        vec_col,
-        F.col("_bb.band_id").alias("band_id"),
-        F.col("_bb.bucket").alias("bucket"),
-    )
-    (
-        _assign_pos(banded, id_col, vec_col)
-        .repartition("band_id", "bucket")
-        .sortWithinPartitions("band_id", "bucket", "pos")
-        .write.mode("overwrite")
-        .partitionBy("band_id", "bucket")
-        .parquet(f"{path}/postings")
+    write_partitioned(
+        _assign_pos(_banded(df, id_col, vec_col, dirs, bucket_length), id_col, vec_col),
+        f"{path}/postings", ["band_id", "bucket"], ["pos"], "overwrite",
+        n_rows=row_bound(df, num_tables),
     )
     spark.createDataFrame(
         [
@@ -1057,38 +1026,6 @@ def ensure_lsh_index(
         source_path,
         "projections",
     )
-
-
-# Driver-pull budget for the affected-partition combo collects (VERDICT
-# r9 #5): the prune sets are ≤ |batch| × num_tables rows by construction
-# — driver-sized for ingest batches, but a "batch" that is a large slice
-# of the corpus would pull millions of combo rows to the driver AND
-# touch most store partitions, at which point the partition-local merge
-# has no advantage: one linear REBUILD pass is cheaper. The cap marks
-# that crossover explicitly (≈64k docs/vectors at 4 tables); see
-# docs/SCALE_DESIGN.md §"maintenance crossover".
-MAX_AFFECTED_COMBOS = 262_144
-
-
-def _collect_combos_budgeted(combo_df: DataFrame, max_combos: int, op: str):
-    """collect() the distinct affected-combo set, pulling at most
-    ``max_combos + 1`` rows (LIMIT-bounded — the guard itself never
-    floods the driver), failing loudly past the budget with the
-    documented alternative. Mirrors the broadcast-tier budget guard
-    (:func:`_collect_corpus`)."""
-    combos = combo_df.distinct().limit(max_combos + 1).collect()
-    if len(combos) > max_combos:
-        raise ValueError(
-            f"{op}: affected-partition combos exceed the driver-pull "
-            f"budget ({max_combos}); the batch touches a corpus-scale "
-            "fraction of the store's partitions, where partition-local "
-            "merge loses to ONE linear rebuild pass (the crossover is "
-            "roughly batch > ~5-10% of corpus — docs/SCALE_DESIGN.md). "
-            "Split the ingest into smaller batches, rebuild the store "
-            "on the grown corpus instead, or raise max_combos "
-            "deliberately."
-        )
-    return combos
 
 
 def lsh_upsert_index(
@@ -1131,88 +1068,41 @@ def lsh_upsert_index(
     readers see the pre- or post-upsert index, never a torn batch)."""
     from flink_quickstart_spark.operators.iterative import _release
 
+    part_cols = ["band_id", "bucket"]
     with store_generation(path, "lsh_upsert_index") as gen:
-        proj_rows = spark.read.parquet(
-            store_data_dir(path, "projections")
-        ).collect()
-        bucket_length = float(proj_rows[0].bucket_length)
-        dirs = np.zeros((len(proj_rows), len(proj_rows[0].direction)))
-        for r in proj_rows:
-            dirs[r.band_id] = r.direction
-        bands = _band_bucket_cols(vec_col, dirs, bucket_length)
-        new_rows = (
-            new_df.select(id_col, vec_col, F.explode(F.array(*bands)).alias("_bb"))
-            .select(
-                id_col,
-                vec_col,
-                F.col("_bb.band_id").alias("band_id"),
-                F.col("_bb.bucket").alias("bucket"),
-            )
-            .localCheckpoint(eager=True)
-        )
+        dirs, bucket_length = _load_projections(open_store_snapshot(path))
+        new_rows = _banded(
+            new_df, id_col, vec_col, dirs, bucket_length
+        ).localCheckpoint(eager=True)
         try:  # from here the checkpoint blocks are always _release'd,
             # including the empty-batch early return (r9 ADVICE)
-            combos = _collect_combos_budgeted(
-                new_rows.select("band_id", "bucket"), max_combos,
-                "lsh_upsert_index",
-            )
+            combos = [
+                (int(r.band_id), int(r.bucket))
+                for r in _collect_combos_budgeted(
+                    new_rows.select(*part_cols), max_combos, "lsh_upsert_index"
+                )
+            ]
             if not combos:
                 # empty batch: nothing to merge — discard the staged
                 # generation, index untouched
                 raise AbortStoreGeneration
-            by_band: dict[int, list[int]] = {}
-            for r in combos:
-                by_band.setdefault(r.band_id, []).append(r.bucket)
-            prune = None
-            for band, buckets in by_band.items():
-                clause = (F.col("band_id") == band) & F.col("bucket").isin(buckets)
-                prune = clause if prune is None else (prune | clause)
             existing = (
                 read_store(spark, path, "postings")
-                .where(prune)
-                .select(id_col, vec_col, "band_id", "bucket")
+                .where(partition_filter(part_cols, combos))
+                .select(id_col, vec_col, *part_cols)
             )
-            (
-                _assign_pos(existing.unionByName(new_rows), id_col, vec_col)
-                .repartition("band_id", "bucket")
-                .sortWithinPartitions("band_id", "bucket", "pos")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("band_id", "bucket")
-                .parquet(os.path.join(gen, "postings"))
+            # size bound: the touched buckets' footer row counts + the batch
+            _files, n_existing = _partition_files(
+                store_data_dir(path, "postings"),
+                [_partition_rel(part_cols, c) for c in combos],
+            )
+            write_partitioned(
+                _assign_pos(existing.unionByName(new_rows), id_col, vec_col),
+                os.path.join(gen, "postings"), part_cols, ["pos"], "dynamic",
+                n_rows=n_existing + new_rows.count(),
             )
         finally:
             _release(new_rows)  # batch-sized checkpoint blocks, freed eagerly
-
-
-def _drop_empty_partitions(
-    base_dir: str, combos: list[tuple], survivors: set[tuple], names: list[str]
-) -> None:
-    """Remove partition directories whose rows were ALL deleted.
-
-    Dynamic partition overwrite replaces only partitions PRESENT in the
-    written data — a partition whose every row was anti-joined away
-    writes nothing and would silently keep its stale files. The
-    affected-combo list is driver-bounded (≤ batch × tables), so the
-    fix is a driver-side directory removal of the zero-survivor combos.
-    (Local/DBFS-style paths ONLY — enforced by require_local_path at
-    every caller's entry and re-checked here; a warehouse deployment
-    expresses the same drop as ALTER TABLE DROP PARTITION / Delta
-    delete.)"""
-    import shutil
-
-    from flink_quickstart_spark.operators.maintenance import require_local_path
-
-    require_local_path(base_dir, "_drop_empty_partitions")
-
-    for combo in combos:
-        if tuple(combo) in survivors:
-            continue
-        d = os.path.join(
-            base_dir, *(f"{n}={v}" for n, v in zip(names, combo))
-        )
-        if os.path.isdir(d):
-            shutil.rmtree(d)
 
 
 def lsh_delete_index(
@@ -1224,104 +1114,32 @@ def lsh_delete_index(
     max_combos: int = MAX_AFFECTED_COMBOS,
 ) -> None:
     """INCREMENTAL deletion from a persisted LSH index — the retention /
-    right-to-erasure counterpart of :func:`lsh_upsert_index`, same
-    partition-local shape: band the deletion batch with the STORED
-    projections (its rows live in exactly those (band, bucket)
-    partitions — banding is deterministic given the projections), read
-    ONLY the affected partitions, anti-join the ids out, re-rank the
-    survivors (:func:`_assign_pos` — bucket-local, so positions close
-    ranks exactly as a rebuild would), dynamically overwrite the
-    affected partitions, and DROP the ones left empty (see
-    :func:`_drop_empty_partitions` — dynamic overwrite alone would
-    silently keep a fully-deleted bucket's stale files).
+    right-to-erasure counterpart of :func:`lsh_upsert_index`. Its
+    locate step bands the deletion batch with the STORED projections
+    (banding is deterministic, so its rows live in exactly those
+    (band, bucket) partitions), and the survivors are re-ranked with
+    :func:`_assign_pos` (bucket-local, so positions close ranks exactly
+    as a rebuild would). ``del_df`` carries (id, vector) — a deletion
+    feed fetches the vector from the primary store first; without it,
+    locating a row means scanning every bucket. Cost ∝ batch × tables ×
+    touched-bucket occupancy. Invariant (tests/test_invariants_r9.py):
+    delete(build(corpus), X) is row-identical to build(corpus \\ X),
+    and delete ∘ upsert is the identity. The protocol (lease, pruned
+    anti-join, emptied-partition drop, atomic publish; local paths
+    only) is :func:`~.maintenance.delete_partition_local`."""
 
-    ``del_df`` carries (id, vector) — a deletion feed fetches the
-    vector from the primary store first; without it, locating a row
-    means scanning every bucket (the corpus-cost path this operator
-    exists to avoid). Cost ∝ batch × tables × touched-bucket occupancy.
-    Invariant (tests/test_invariants_r9.py): delete(build(corpus), X)
-    is row-identical to build(corpus \\ X), and delete ∘ upsert is the
-    identity. Publishes as an atomic generation commit — a concurrent
-    reader sees the pre- or post-delete index, never a mix (local
-    paths only; generation clone + emptied-partition drop are
-    filesystem calls — fail loudly on remote schemes)."""
-    with store_generation(path, "lsh_delete_index") as gen:
-        _lsh_delete_into(spark, path, gen, del_df, id_col, vec_col, max_combos)
-
-
-def _lsh_delete_into(
-    spark, path, gen, del_df, id_col, vec_col, max_combos
-) -> None:
-    proj_rows = read_store(spark, path, "projections").collect()
-    bucket_length = float(proj_rows[0].bucket_length)
-    dirs = np.zeros((len(proj_rows), len(proj_rows[0].direction)))
-    for r in proj_rows:
-        dirs[r.band_id] = r.direction
-    bands = _band_bucket_cols(vec_col, dirs, bucket_length)
-    del_rows = (
-        del_df.select(id_col, vec_col, F.explode(F.array(*bands)).alias("_bb"))
-        .select(
-            id_col,
-            F.col("_bb.band_id").alias("band_id"),
-            F.col("_bb.bucket").alias("bucket"),
+    def locate():
+        dirs, bucket_length = _load_projections(open_store_snapshot(path))
+        return _banded(del_df, id_col, vec_col, dirs, bucket_length).select(
+            id_col, "band_id", "bucket"
         )
-        .localCheckpoint(eager=True)
+
+    delete_partition_local(
+        spark, path, "lsh_delete_index", "postings", ["band_id", "bucket"],
+        ["pos"], id_col, locate,
+        rerank=lambda kept: _assign_pos(kept.drop("pos"), id_col, vec_col),
+        max_combos=max_combos,
     )
-    try:
-        combos = [
-            (int(r.band_id), int(r.bucket))
-            for r in _collect_combos_budgeted(
-                del_rows.select("band_id", "bucket"), max_combos,
-                "lsh_delete_index",
-            )
-        ]
-        if not combos:
-            raise AbortStoreGeneration  # empty batch — index untouched
-        by_band: dict[int, list[int]] = {}
-        for band, bucket in combos:
-            by_band.setdefault(band, []).append(bucket)
-        prune = None
-        for band, buckets in by_band.items():
-            clause = (F.col("band_id") == band) & F.col("bucket").isin(buckets)
-            prune = clause if prune is None else (prune | clause)
-        survivors_df = (
-            read_store(spark, path, "postings")
-            .where(prune)
-            .select(id_col, vec_col, "band_id", "bucket")
-            .join(
-                del_rows.select(F.col(id_col).alias("_del_id")).distinct(),
-                F.col(id_col) == F.col("_del_id"),
-                "left_anti",
-            )
-        )
-        posted = _assign_pos(survivors_df, id_col, vec_col).localCheckpoint(
-            eager=True
-        )
-        try:
-            (
-                posted.repartition("band_id", "bucket")
-                .sortWithinPartitions("band_id", "bucket", "pos")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("band_id", "bucket")
-                .parquet(os.path.join(gen, "postings"))
-            )
-            surviving = {
-                (int(r.band_id), int(r.bucket))
-                for r in posted.select("band_id", "bucket").distinct().collect()
-            }
-            _drop_empty_partitions(
-                os.path.join(gen, "postings"), combos, surviving,
-                ["band_id", "bucket"],
-            )
-        finally:
-            from flink_quickstart_spark.operators.iterative import _release
-
-            _release(posted)
-    finally:
-        from flink_quickstart_spark.operators.iterative import _release
-
-        _release(del_rows)
 
 
 def lsh_query_index(
@@ -1371,11 +1189,7 @@ def lsh_query_index(
     rows and silently drop matches. Materialize (localCheckpoint) a
     nondeterministic batch first."""
     snap = open_store_snapshot(path)  # one resolve = one consistent snapshot
-    proj_rows = snap.read(spark, "projections").collect()
-    bucket_length = float(proj_rows[0].bucket_length)
-    dirs = np.zeros((len(proj_rows), len(proj_rows[0].direction)))
-    for r in proj_rows:
-        dirs[r.band_id] = r.direction
+    dirs, bucket_length = _load_projections(snap)
     bands = _band_bucket_cols(vec_col, dirs, bucket_length)
     offsets = range(-multi_probe, multi_probe + 1) if multi_probe else (0,)
     qb = (
@@ -1404,19 +1218,12 @@ def lsh_query_index(
     # (a driver-side numpy recompute could disagree at bucket boundaries
     # under float reordering) — and applied as a static predicate on the
     # partition columns. The scan then lists only probed directories.
-    combos = qb.select("band_id", "bucket").distinct().collect()
-    by_band: dict[int, list[int]] = {}
-    for r in combos:
-        by_band.setdefault(r.band_id, []).append(r.bucket)
-    prune = None
-    for band, buckets in by_band.items():
-        clause = (F.col("band_id") == band) & F.col("bucket").isin(buckets)
-        prune = clause if prune is None else (prune | clause)
+    combos = [tuple(r) for r in qb.select("band_id", "bucket").distinct().collect()]
     postings = snap.read(spark, "postings").where(
         F.col("pos") <= cap_per_bucket
     )
-    if prune is not None:
-        postings = postings.where(prune)
+    if combos:
+        postings = postings.where(partition_filter(["band_id", "bucket"], combos))
     cand = postings.join(F.broadcast(qb), ["band_id", "bucket"]).where(
         F.col(id_col) != F.col("query_id")
     )
@@ -1522,11 +1329,7 @@ def ivf_query_index(
     nondeterministic batch first, or its probe rows may land in pruned-
     away clusters and silently drop matches."""
     snap = open_store_snapshot(path)  # one resolve = one consistent snapshot
-    cent_rows = snap.rows("centroids")
-    cents = np.zeros((len(cent_rows), len(cent_rows[0].centroid)))
-    for r in cent_rows:
-        cents[r.cluster_id] = r.centroid
-    bc = spark.sparkContext.broadcast(cents)
+    bc = spark.sparkContext.broadcast(load_centroids(snap))
 
     def assign_probes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         c = bc.value

@@ -209,8 +209,8 @@ def q_llm_ivf_upsert(spark, sf_dir):
         _ensure_index,
         ivf_build_index,
         ivf_upsert_index,
+        load_centroids,
     )
-    import numpy as np
 
     t = tables(spark, sf_dir)
     sf_name = os.path.basename(sf_dir.rstrip("/"))
@@ -233,13 +233,10 @@ def q_llm_ivf_upsert(spark, sf_dir):
         # full-corpus assignment against the UPSERTED index's centroids
         # (the pinned-centroid rebuild the invariant compares against)
         from flink_quickstart_spark.operators.maintenance import (
-            read_store_rows,
+            open_store_snapshot,
         )
 
-        cent_rows = read_store_rows(ups, "centroids")
-        cents = np.zeros((len(cent_rows), len(cent_rows[0].centroid)))
-        for r in cent_rows:
-            cents[r.cluster_id] = r.centroid
+        cents = load_centroids(open_store_snapshot(ups))
         (
             _assign_members_df(t.embeddings, cents, "vec_id", "embedding")
             .write.mode("overwrite")

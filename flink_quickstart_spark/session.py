@@ -3,11 +3,12 @@
 Centralizes every config the engine depends on. Notable and load-bearing:
 
 - ``spark.sql.legacy.parquet.nanosAsLong=true`` — the testdata ``events.ts``
-  column is parquet TIMESTAMP(NANOS), which Spark 4.x refuses to read
-  natively; with this flag it arrives as bigint nanoseconds and
-  ``sources.tables`` converts it to a microsecond TimestampType using exact
-  integer division (``ts DIV 1000``) so values match DuckDB's ns→µs
-  truncation bit-for-bit.
+  column is parquet TIMESTAMP(MICROS, not UTC-adjusted), which Spark reads
+  as TimestampNTZ and ``sources.tables`` casts to TimestampType. The flag
+  matters for TIMESTAMP(NANOS) files from other writers, which Spark 4.x
+  refuses to read natively: with it they arrive as bigint nanoseconds and
+  ``sources.tables`` converts them with exact integer division
+  (``ts DIV 1000``), matching DuckDB's ns→µs truncation bit-for-bit.
 - ``spark.sql.session.timeZone=UTC`` — deterministic timestamp rendering;
   the oracle engine (DuckDB) is timezone-naive.
 - AQE on (skew-join splitting, runtime coalescing, broadcast demotion) —

@@ -4,18 +4,20 @@ The canonical input catalog: TPC-H-ish star schema + an ``events`` stream
 table + LLM-pipeline tables (``documents``, ``embeddings``), one parquet
 file per table per scale factor (TESTDATA.md).
 
-``events.ts`` is parquet TIMESTAMP(NANOS). Spark's ingestion of that type
-varies by build, so ``load_table`` dispatches on the dtype it actually
-observes:
+``events.ts`` in the testdata fixtures is parquet TIMESTAMP(MICROS) without
+UTC adjustment, which Spark reads as ``TimestampNTZType``. A TIMESTAMP(NANOS)
+file from another writer is read differently by different Spark builds, so
+``load_table`` dispatches on the dtype it actually observes:
 
-- ``LongType`` (``spark.sql.legacy.parquet.nanosAsLong=true`` honored):
-  exact integer division ``ts DIV 1000`` → ``timestamp_micros``. Double
-  division (``ts/1000``) would be WRONG: 1.7e18 does not fit a double
-  mantissa, so the rounded result drifts ±1µs from DuckDB's truncation.
-- ``TimestampNTZType`` (current builds read NANOS as NTZ, already
-  floor-truncated to µs by the reader): cast to ``TimestampType``. Under
-  the pinned UTC session timezone this is wall-clock preserving, so values
-  still match DuckDB's ns→µs truncation bit-for-bit.
+- ``TimestampNTZType`` (the fixtures; also NANOS files on current builds,
+  already floor-truncated to µs by the reader): cast to ``TimestampType``.
+  Under the pinned UTC session timezone this is wall-clock preserving, so
+  values match DuckDB's read bit-for-bit.
+- ``LongType`` (a NANOS file with
+  ``spark.sql.legacy.parquet.nanosAsLong=true`` honored): exact integer
+  division ``ts DIV 1000`` → ``timestamp_micros``. Double division
+  (``ts/1000``) would be WRONG: 1.7e18 does not fit a double mantissa, so
+  the rounded result drifts ±1µs from DuckDB's truncation.
 - ``TimestampType``: already normalized, pass through.
 
 At scale these loaders are the single choke point for scan hygiene:

@@ -42,10 +42,30 @@ from flink_quickstart_spark.operators.iterative import (
     pagerank,
 )
 from flink_quickstart_spark.operators.maintenance import (
+    compact_ivf_index,
+    compact_ivfpq_index,
+    compact_lsh_index,
     compact_minhash_store,
+    compact_pq_index,
     data_file_counts,
     read_store,
     store_data_dir,
+)
+from flink_quickstart_spark.operators.quantization import (
+    ivfpq_build_index,
+    ivfpq_delete_index,
+    ivfpq_upsert_index,
+    pq_build_index,
+    pq_delete_index,
+    pq_upsert_index,
+)
+from flink_quickstart_spark.operators.similarity import (
+    ivf_build_index,
+    ivf_delete_index,
+    ivf_upsert_index,
+    lsh_build_index,
+    lsh_delete_index,
+    lsh_upsert_index,
 )
 from flink_quickstart_spark.session import DRIVER_BUDGETS, fits_driver
 
@@ -204,12 +224,72 @@ def _store_case(spark, path, epoch_partitioned=False):
     return [(f.name, f.dataType) for f in bands.schema], rows
 
 
+# per vector store: build, upsert, delete, compact, data subdir,
+# partition columns
+_VECTOR_STORES = {
+    "lsh": (
+        lsh_build_index, lsh_upsert_index, lsh_delete_index,
+        compact_lsh_index, "postings", ["band_id", "bucket"],
+    ),
+    "ivf": (
+        partial(ivf_build_index, n_clusters=4), ivf_upsert_index,
+        ivf_delete_index, compact_ivf_index, "members", ["cluster_id"],
+    ),
+    "pq": (
+        partial(pq_build_index, m=4, k=16), pq_upsert_index,
+        pq_delete_index, compact_pq_index, "codes", ["_idmod"],
+    ),
+    "ivfpq": (
+        partial(ivfpq_build_index, n_clusters=4, m=4, k=16),
+        ivfpq_upsert_index, ivfpq_delete_index, compact_ivfpq_index,
+        "codes", ["cluster_id"],
+    ),
+}
+
+
+def _vector_store_case(spark, path, kind):
+    """Build, upsert, a delete that empties the least-occupied
+    partition, compact; returns what a reader sees."""
+    build, upsert, delete, compact, subdir, part_cols = _VECTOR_STORES[kind]
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    path = str(path)
+    build(emb.where(F.col("vec_id") % 4 != 0), path)
+    upsert(spark, path, emb.where(F.col("vec_id") % 4 == 0))
+    store = read_store(spark, path, subdir)
+    smallest = (
+        store.groupBy(*part_cols).count().orderBy("count", *part_cols).first()
+    )
+    in_smallest = F.lit(True)
+    for c in part_cols:
+        in_smallest = in_smallest & (F.col(c) == smallest[c])
+    victims = store.where(in_smallest).select("vec_id").union(
+        emb.where(F.col("vec_id") % 7 == 0).select("vec_id")
+    )
+    delete(spark, path, emb.join(victims, "vec_id", "left_semi"))
+    emptied = os.path.join(
+        store_data_dir(path, subdir),
+        *(f"{c}={smallest[c]}" for c in part_cols),
+    )
+    assert not os.path.exists(emptied)
+    compact(spark, path)
+    out = read_store(spark, path, subdir)
+    files = set(data_file_counts(store_data_dir(path, subdir)).values())
+    assert files == {1}  # compaction left one file per partition
+    rows = _rows(out)
+    assert rows
+    return [(f.name, f.dataType) for f in out.schema], rows
+
+
 _FAST_PATH_CASES = {
     "pagerank": ("pagerank", _pagerank_case),
     "connected_components": ("connected_components", _components_case),
     "bpe": ("bpe", _bpe_case),
     "store": ("store_write", _store_case),
     "store_epoch": ("store_write", partial(_store_case, epoch_partitioned=True)),
+    **{
+        kind: ("store_write", partial(_vector_store_case, kind=kind))
+        for kind in _VECTOR_STORES
+    },
 }
 
 
@@ -220,14 +300,17 @@ def test_driver_fast_path_matches_distributed(
     """Each DRIVER_BUDGETS site returns the same output with the table
     as-is (driver path, checked in the decision log) and with every
     budget at 0 (distributed path). PageRank agrees to well inside the
-    key's round-6 output precision (summation order differs)."""
+    key's round-6 output precision (summation order differs). Every
+    store write is sized: none logs an unknown (None) size."""
     site, run = _FAST_PATH_CASES[case]
     caplog.set_level(logging.DEBUG, logger="flink_quickstart_spark.session")
 
     def paths_taken():
-        paths = {r.args[3] for r in caplog.records if r.args[0] == site}
+        decisions = [r.args for r in caplog.records if r.args[0] == site]
         caplog.clear()
-        return paths
+        if site == "store_write":
+            assert all(observed is not None for _s, _b, observed, _p in decisions)
+        return {path for _s, _b, _o, path in decisions}
 
     fast = run(spark, tmp_path / "fast")
     assert "driver" in paths_taken()
@@ -247,11 +330,21 @@ def test_budget_zero_means_never(monkeypatch):
     assert not fits_driver("store_write", 0)
 
 
-def test_compaction_write_failure_keeps_store(spark, tmp_path, monkeypatch):
-    """A driver-side compaction whose partition writer fails on the
-    second partition raises, and the published store keeps its full
-    row multiset: the staged generation is aborted, and nothing is
-    rewritten from a half-mutated directory."""
+_FAILING_MUTATIONS = {
+    "compact": lambda spark, path, docs: compact_minhash_store(spark, path),
+    "delete": lambda spark, path, docs: minhash_delete_store(
+        spark, path, docs.where(F.col("doc_id") % 3 == 0)
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_FAILING_MUTATIONS))
+def test_compaction_write_failure_keeps_store(spark, tmp_path, monkeypatch, op):
+    """A driver-side store mutation (compaction, or a delete's survivor
+    write) whose partition writer fails on the second partition raises,
+    and the published store keeps its full row multiset: the staged
+    generation is aborted, and nothing is rewritten from a half-mutated
+    directory."""
     import pyarrow.parquet as pq
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").limit(60)
@@ -269,7 +362,7 @@ def test_compaction_write_failure_keeps_store(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(pq, "write_table", failing_write)
     with pytest.raises(OSError, match="injected"):
-        compact_minhash_store(spark, path)
+        _FAILING_MUTATIONS[op](spark, path, docs)
     monkeypatch.undo()
     assert before and _rows(read_store(spark, path, "bands")) == before
 

@@ -115,3 +115,44 @@ def test_materialization_scanner_fires_on_planted_collect(tmp_path):
     findings, waived = audit_materialization(pkg)
     assert findings == ["bad.py:2 [hot_path] .collect()"]
     assert waived == []
+
+
+# the store writer, plus the corpus-scale IVF/IVFPQ build and retrain
+# writes that keep an unshuffled chain (a repartition on cluster_id
+# would cap a corpus write at n_clusters tasks)
+_WRITER_CHAIN_SITES = {
+    ("maintenance.py", "write_partitioned"),
+    ("similarity.py", "ivf_build_index"),
+    ("similarity.py", "ivf_retrain_index"),
+    ("quantization.py", "ivfpq_build_index"),
+    ("quantization.py", "ivfpq_retrain_index"),
+}
+
+
+def test_store_writer_chains_only_at_named_sites():
+    """DataFrameWriter ``.partitionBy(`` appears only in the store writer
+    and the four corpus-scale sites: every other partitioned store write
+    goes through ``maintenance.write_partitioned``. Window specs
+    (``Window.partitionBy``) are not writers."""
+    import ast
+
+    ops = Path(__file__).resolve().parents[1] / "flink_quickstart_spark" / "operators"
+    sites = set()
+    for py in sorted(ops.glob("*.py")):
+        tree = ast.parse(py.read_text())
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for node in ast.walk(fn):
+                if not (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "partitionBy"
+                ):
+                    continue
+                root = node.func.value
+                while isinstance(root, (ast.Attribute, ast.Call)):
+                    root = root.value if isinstance(root, ast.Attribute) else root.func
+                if not (isinstance(root, ast.Name) and root.id == "Window"):
+                    sites.add((py.name, fn.name))
+    assert sites == _WRITER_CHAIN_SITES

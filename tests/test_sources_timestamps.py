@@ -1,8 +1,9 @@
 """Property test pinning ``events.ts`` ingestion semantics.
 
-The testdata writes ``ts`` as parquet TIMESTAMP(NANOS). Whatever dtype
-this platform's Spark build surfaces (bigint nanos under the legacy
-flag, TIMESTAMP_NTZ on current builds, or native TIMESTAMP), the loader
+The testdata writes ``ts`` as parquet TIMESTAMP(MICROS), which Spark reads
+as TIMESTAMP_NTZ; NANOS files from other writers surface as bigint nanos
+under the legacy flag or as TIMESTAMP_NTZ. Whatever dtype this
+platform's Spark build surfaces (or native TIMESTAMP), the loader
 must produce microsecond values identical to DuckDB's ``epoch_us`` read
 of the same file — i.e. floor truncation of nanoseconds, never rounding.
 This is the regression test for the round-2 platform drift that broke

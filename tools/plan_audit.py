@@ -269,11 +269,9 @@ MATERIALIZE_ALLOWED = {
         "predicate (r8)"
     ),
     "operators/similarity.py:lsh_query_index:collect": (
-        "two driver-bounded pulls when opening a persisted LSH index: "
-        "the O(num_tables) projection table, and the query batch's "
-        "distinct (band, bucket) combos (≤ batch × tables rows) that "
-        "become the STATIC partition-pruning predicate — DPP measured "
-        "not firing for this join shape (r8)"
+        "the query batch's distinct (band, bucket) combos (≤ batch × "
+        "tables rows) that become the STATIC partition-pruning "
+        "predicate — DPP measured not firing for this join shape (r8)"
     ),
     "plans/analytics_r6.py:q_llm_bpe_encode:collect": (
         "O(n_merges) pull of the learned merge table (16 rows) — the "
@@ -295,18 +293,10 @@ MATERIALIZE_ALLOWED = {
         "output foreachBatch splitter"
     ),
     "operators/similarity.py:ivf_query_index:collect": (
-        "two driver-bounded pulls when opening a persisted IVF index: "
-        "the O(n_clusters) centroid table (default 16 rows), and the "
-        "query batch's distinct probed cluster ids (≤ n_clusters) that "
-        "become the STATIC partition-pruning predicate — DPP measured "
-        "not firing for the former broadcast left-semi shape (r8)"
-    ),
-    "operators/similarity.py:lsh_upsert_index:collect": (
-        "two driver-bounded pulls when merging a batch into a persisted "
-        "LSH index: the O(num_tables) projection table, and the batch's "
-        "distinct affected (band, bucket) combos (≤ batch × tables "
-        "rows) that become the STATIC partition predicate selecting "
-        "which bucket partitions to re-rank (r9)"
+        "the query batch's distinct probed cluster ids (≤ n_clusters) "
+        "that become the STATIC partition-pruning predicate — DPP "
+        "measured not firing for the former broadcast left-semi shape "
+        "(r8)"
     ),
     # r12-opt: seven former waivers (minhash/PQ meta pulls, centroid/
     # codebook/rotation loads, the r9 retrain-reference centroid pull)
@@ -314,30 +304,21 @@ MATERIALIZE_ALLOWED = {
     # reads now go through maintenance.read_store_rows (driver-side
     # pyarrow over the snapshot manifest, no Spark job; see
     # OPTIMIZATION_r12.md "small store artifacts").
-    "operators/similarity.py:_lsh_delete_into:collect": (
-        "three driver-bounded pulls for partition-local deletion: the "
-        "O(num_tables) projection table, the batch's affected (band, "
-        "bucket) combos (≤ batch × tables, LIMIT-capped by the r10 "
-        "budget guard), and the surviving combo set (⊆ affected) that "
-        "decides which emptied partition dirs to drop (r9; body "
-        "extracted to _locked under the r10 writer lease)"
+    "operators/maintenance.py:delete_partition_local:collect": (
+        "the surviving rows per touched partition (one engine-side "
+        "count aggregate over the checkpointed survivors, ≤ affected "
+        "partitions): sizes the survivor write and decides which "
+        "emptied partition dirs to drop — the one partition-local "
+        "delete every persisted store runs"
     ),
-    "operators/similarity.py:_ivf_delete_into:collect": (
-        "three driver-bounded pulls: the O(n_clusters) centroid table, "
-        "the batch's affected cluster ids (≤ n_clusters), and the "
-        "surviving cluster set for the emptied-partition drop (r9; "
-        "body extracted to _locked under the r10 writer lease)"
+    "operators/similarity.py:_cluster_occupancy:collect": (
+        "O(n_clusters)-bounded per-cluster occupancy aggregate "
+        "(engine-side count, ≤ 16 rows at the defaults) for the drift "
+        "monitor and the IVF/IVFPQ retrain drift reports (r10)"
     ),
-    "operators/dedup.py:_minhash_delete_into:collect": (
-        "four driver-bounded pulls: the 1-row meta record, the batch's "
-        "affected sig buckets (≤ hmod = 64), the drop-unit combos "
-        "present in the pruned scan (≤ hmod × live epochs), and the "
-        "surviving set for the emptied-partition drop (r9; epoch-aware "
-        "+ extracted to _locked under the r10 writer lease)"
-    ),
-    "operators/similarity.py:_collect_combos_budgeted:collect": (
-        "the affected-partition combo pull shared by the LSH "
-        "upsert/delete paths — ≤ batch × num_tables rows by "
+    "operators/maintenance.py:_collect_combos_budgeted:collect": (
+        "the affected-partition combo pull shared by the LSH upsert "
+        "and every store delete — ≤ batch × num_tables rows by "
         "construction AND LIMIT-capped at max_combos + 1 so the guard "
         "itself cannot flood the driver; past the cap it fails loudly "
         "with the rebuild-crossover guidance (r10, VERDICT r9 #5)"
@@ -364,45 +345,15 @@ MATERIALIZE_ALLOWED = {
         "residual codebook k-means; the corpus encode itself is one "
         "distributed Arrow pass (r10)"
     ),
-    "operators/quantization.py:ivfpq_retrain_index:collect": (
-        "two O(n_clusters)-bounded occupancy pulls (≤ 16 rows each, "
-        "engine-side count aggregate) for the drift report — the "
-        "retrain itself is one distributed encode pass + a partitioned "
-        "write (r10)"
-    ),
     "operators/quantization.py:ivfpq_retrain_index:toPandas": (
         "bounded deterministic training sample (orderBy(id).limit — "
         "≤ sample_rows rows) for the residual codebook k-means, same "
         "discipline as the build (r10)"
     ),
-    "operators/quantization.py:pq_delete_index:collect": (
-        "two affected-bucket combo pulls, ≤ id_buckets = 64 distinct "
-        "rows each by construction (the flat store's id-hash layout — "
-        "the combo set drives static partition pruning and the "
-        "emptied-bucket drop) (r11)"
-    ),
-    "operators/quantization.py:ivfpq_delete_index:collect": (
-        "two affected-cluster combo pulls, ≤ n_clusters distinct rows "
-        "each by construction (the IVF delete discipline — the combo "
-        "set drives static partition pruning and the emptied-partition "
-        "drop) (r10)"
-    ),
-    "operators/similarity.py:ivf_drift_stats:collect": (
-        "two O(n_clusters)-bounded pulls (centroid table + per-cluster "
-        "occupancy aggregate, ≤ 16 rows each) for the read-only drift "
-        "monitor (r10)"
-    ),
     "operators/similarity.py:ivf_drift_stats:toPandas": (
         "bounded deterministic member sample (orderBy(id).limit, "
         "default 4096 rows) for the quantization-error estimate — the "
         "per-ingest-day health check that triggers retrain (r10)"
-    ),
-    "operators/similarity.py:ivf_retrain_index:collect": (
-        "three O(n_clusters)-bounded pulls (≤ 16 rows each): the old "
-        "centroid table for the drift report, and the before/after "
-        "per-cluster occupancy aggregates (engine-side count, "
-        "driver-sized result) — the retrain itself is one distributed "
-        "assignment pass + a partitioned write (r10)"
     ),
     "plans/analytics_ext.py:q_embed_pca_project:collect": (
         "two aggregate-sized collects: the O(dims²)=2080-scalar raw-"
