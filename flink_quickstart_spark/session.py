@@ -15,9 +15,24 @@ Centralizes every config the engine depends on. Notable and load-bearing:
   the 100 TB path leans on it; harmless at test scale.
 - Arrow enabled — every Pandas-UDF exchange is columnar.
 
-At 100 TB on a real cluster the same factory applies; only
-``shuffle.partitions`` (sized ~128 MB/partition of shuffle data) and
-executor sizing change, both env-overridable here.
+Shuffle partitions follow two policies (docs/SCALE_DESIGN.md):
+
+- **Batch** starts every exchange at a data-sized count (~128 MB of
+  input per partition, ``shuffle_partitions_for_bytes``), held in
+  ``spark.sql.adaptive.coalescePartitions.initialPartitionNum``; with
+  AQE coalescing on, that is the count Spark plans with, and AQE
+  coalesces from it at run time.
+- **Streaming** gets one partition per core: ``spark.sql.shuffle.partitions``
+  is set to ``defaultParallelism``. Streaming runs with AQE off, so a
+  stateful operator's partition count is this value, frozen in the
+  checkpoint when the query first starts, and every partition costs one
+  task plus one state-store load and commit per micro-batch. A query
+  restarted from an older checkpoint keeps the count it recorded.
+
+At 100 TB on a real cluster the same factory applies; only the batch
+count (which the sizing clamps at 4096) and executor sizing change, both
+env-overridable here, and the streaming count follows the cluster's
+cores.
 """
 
 from __future__ import annotations
@@ -139,9 +154,17 @@ def get_spark(
     """Build (or fetch) the engine's SparkSession.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``).
-    ``shuffle_partitions`` defaults to ``$SPARK_GRAFT_SHUFFLE_PARTITIONS``
-    or 32 — at cluster scale, set it to ~2-3× total cores or rely on AQE
-    coalescing from a high initial value.
+    ``shuffle_partitions`` is the BATCH count every batch exchange starts
+    at before AQE coalesces it (stored as
+    ``spark.sql.adaptive.coalescePartitions.initialPartitionNum``); it
+    defaults to ``$SPARK_GRAFT_SHUFFLE_PARTITIONS`` or 32, and callers that
+    know their input pass ``shuffle_partitions_for_bytes(...)``.
+
+    ``spark.sql.shuffle.partitions`` is set to ``defaultParallelism``, the
+    STREAMING state count: streaming runs with AQE off, the checkpoint
+    freezes the count, and each partition costs one task plus one
+    state-store commit per micro-batch. Checkpoints created under another
+    count keep their recorded one.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -160,7 +183,10 @@ def get_spark(
         .config("spark.driver.memory", driver_mem)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config(
+            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+            str(shuffle_partitions),
+        )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -189,4 +215,8 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    )
+    return spark

@@ -77,11 +77,23 @@ def events_stream(
     return table_stream(spark, sf_dir, "events", max_files_per_trigger)
 
 
+def _await_drained(q, timeout_s: int = 120) -> None:
+    """Wait for an availableNow query to drain its source; on timeout stop
+    it and raise ``TimeoutError`` rather than let the caller read a
+    partial sink while the query keeps running."""
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {q.name or q.id} did not drain within {timeout_s} s"
+        )
+
+
 def run_to_memory(
     df: DataFrame, query_name: str | None = None, output_mode: str = "append"
 ) -> DataFrame:
     """Drain a streaming DataFrame through an availableNow trigger into a
-    memory sink; returns the sink contents as a batch DataFrame (A11)."""
+    memory sink; returns the sink contents as a batch DataFrame (A11).
+    Raises ``TimeoutError`` (query stopped) if it does not drain."""
     spark = df.sparkSession
     name = query_name or f"q_{uuid.uuid4().hex[:8]}"
     q = (
@@ -92,7 +104,7 @@ def run_to_memory(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await_drained(q)
     return spark.table(name)
 
 
@@ -118,7 +130,8 @@ def write_stream_parquet(
     df: DataFrame, out_dir: str, checkpoint: str | None = None
 ) -> None:
     """A9 streaming file sink: exactly-once via checkpoint WAL + atomic
-    task commits. availableNow-bounded for tests."""
+    task commits. availableNow-bounded for tests; raises ``TimeoutError``
+    (query stopped) if it does not drain."""
     q = (
         df.writeStream.format("parquet")
         .option("path", out_dir)
@@ -126,7 +139,7 @@ def write_stream_parquet(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await_drained(q)
 
 
 def foreach_batch_with_late_side_output(

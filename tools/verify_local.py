@@ -80,13 +80,24 @@ def normalize(columns, rows):
     return cols, out
 
 
+def _session(app_name: str, sf: str):
+    """Engine session whose batch plans start at the data-sized shuffle
+    count the driver's gate uses (``__spark_entry__`` sizes the same way)."""
+    from flink_quickstart_spark import get_spark
+    from flink_quickstart_spark.session import dir_bytes, shuffle_partitions_for_bytes
+
+    return get_spark(
+        app_name=app_name,
+        shuffle_partitions=shuffle_partitions_for_bytes(dir_bytes(sf)),
+    )
+
+
 def analyze_sweep(sf: str) -> int:
     """Force Catalyst analysis of every registry key (no execution) and
     DuckDB EXPLAIN of every oracle. Returns the number of failures."""
     import __spark_entry__ as entrymod
-    from flink_quickstart_spark import get_spark
 
-    spark = get_spark(app_name="verify-analyze")
+    spark = _session("verify-analyze", sf)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
@@ -134,9 +145,8 @@ def main() -> int:
         return 1 if analyze_sweep(args.sf) else 0
 
     import __spark_entry__ as entrymod
-    from flink_quickstart_spark import get_spark
 
-    spark = get_spark(app_name="verify-local")
+    spark = _session("verify-local", args.sf)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
