@@ -25,7 +25,10 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 from pyspark.sql import functions as F
 
 from flink_quickstart_spark import get_spark
-from flink_quickstart_spark.streaming.harness import events_stream
+from flink_quickstart_spark.streaming.harness import (
+    events_stream,
+    write_stream_parquet,
+)
 
 
 def main() -> None:
@@ -41,15 +44,9 @@ def main() -> None:
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("sum_v"))
         .select("w.start", "w.end", "event_type", "n", "sum_v")
     )
-    q = (
-        windowed.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", out)
-        .option("checkpointLocation", out + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+    # stops the query and raises TimeoutError if it does not drain, so
+    # a partial sink is never read
+    write_stream_parquet(windowed, out, out + "_ckpt")
     result = spark.read.parquet(out)
     print(f"windows written: {result.count()} -> {out}")
     result.orderBy(F.col("n").desc()).show(10, truncate=False)

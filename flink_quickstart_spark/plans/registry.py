@@ -18,8 +18,11 @@ demoting the check.
 
 from __future__ import annotations
 
+import functools
+import json
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from pathlib import Path
 from types import SimpleNamespace
 
 from pyspark.sql import DataFrame, SparkSession
@@ -67,161 +70,23 @@ def register(
     return deco
 
 
-# Driver priority (r5, updated r6). The driver samples ~50 keys per
-# round in dict order, so queries() yields highest-evidence-value keys
-# first.
-#
-# Every registered key is green in the repo's stricter exact-value
-# gate; the frozen set below is the union of keys that have EVER
-# appeared in a driver-side CORRECTNESS_r*.json row (rounds 1-5 →
-# 180/238). Ordering rule: never-driver-sampled keys first — round-4/5
-# module additions ahead of the older backlog, REGISTRATION (FIFO)
-# order within each tier (r5 ADVICE: the old comment claimed LIFO; the
-# code always did FIFO and tier 0 fits one sample anyway) — then the
-# ever-sampled keys in registration order. The r6 sample drains the
-# 58-key backlog to ~230/238.
-_EVER_DRIVER_SAMPLED: frozenset[str] = frozenset(
-    {
-        "q_agg_approx_percentile", "q_agg_approxcd", "q_agg_bool",
-        "q_agg_collect", "q_agg_countdistinct", "q_agg_cube",
-        "q_agg_global", "q_agg_group", "q_agg_groupingsets",
-        "q_agg_having", "q_agg_histogram", "q_agg_percentile",
-        "q_agg_rollup", "q_agg_salted", "q_agg_stats_family",
-        "q_cast_types", "q_cogroup_stats", "q_count_window",
-        "q_dedup_events", "q_distinct", "q_except", "q_filter_pred",
-        "q_flatmap_tokenize", "q_fn_array", "q_fn_conditional",
-        "q_fn_datetime", "q_fn_hash", "q_fn_json", "q_fn_map",
-        "q_fn_math", "q_fn_string", "q_funnel", "q_graph_components",
-        "q_graph_pagerank", "q_grouped_map_zscore", "q_intersect",
-        "q_join_anti", "q_join_asof", "q_join_broadcast",
-        "q_join_bucketed", "q_join_cross", "q_join_interval",
-        "q_join_orders_customer", "q_join_outer", "q_join_range_binned",
-        "q_join_semi", "q_join_star", "q_join_theta", "q_limit_topn",
-        "q_llm_ann_ivf", "q_llm_ann_lsh", "q_llm_chunk",
-        "q_llm_decontaminate", "q_llm_dedup_exact",
-        "q_llm_dedup_groups", "q_llm_dedup_spans", "q_llm_knn",
-        "q_llm_langstats", "q_llm_lexicon_score", "q_llm_neardup",
-        "q_llm_neardup_cosine", "q_llm_neardup_minhash",
-        "q_llm_pack_sequences", "q_llm_sample_balanced",
-        "q_llm_simhash", "q_llm_tfidf", "q_llm_wordcount",
-        "q_merge_upsert", "q_multimodal_decode",
-        "q_multimodal_framesample", "q_pattern_click_then_purchase",
-        "q_pivot", "q_profile_columns", "q_project_arith",
-        "q_retention_cohorts", "q_rollup_multires", "q_sample_split",
-        "q_sample_stratified", "q_scan_csv_roundtrip",
-        "q_scan_json_corrupt", "q_scan_orc_roundtrip", "q_scd2_history",
-        "q_sessionize_gaps_islands", "q_snapshot_diff", "q_sort",
-        "q_sql_corr_subquery", "q_sql_cte_topk", "q_sql_exists",
-        "q_sql_q10", "q_sql_q13", "q_sql_q14", "q_sql_q15", "q_sql_q17",
-        "q_sql_q18", "q_sql_q19", "q_sql_q3", "q_sql_q5", "q_sql_q6",
-        "q_sql_q7", "q_sql_q8", "q_sql_window", "q_text_fingerprint",
-        "q_text_fuzzy_match", "q_text_gopher_filters", "q_text_langid",
-        "q_text_langid_ngram", "q_text_pii_scrub", "q_text_quality",
-        "q_text_tokens", "q_topk_pergroup", "q_ts_features",
-        "q_ts_ffill", "q_ts_znorm_match", "q_udaf_wavg", "q_udf_scalar",
-        "q_udtf_split", "q_union", "q_unpivot", "q_upsert_latest",
-        "q_wf_distribution", "q_wf_firstlast", "q_wf_laglead",
-        "q_wf_nth", "q_wf_rangeframe", "q_wf_rank", "q_wf_running",
-        "q_wf_trailing_7d", "q_window_session", "q_window_sliding",
-        "q_window_tumbling",
-        # round-5 driver sample (CORRECTNESS_r05.json, 50 keys, all
-        # first-time green) — frozen r6; cumulative coverage 180/238
-        "q_ab_cuped", "q_ab_welch_ttest", "q_agg_argminmax",
-        "q_agg_bitops", "q_agg_cohort_ltv", "q_agg_entropy",
-        "q_agg_hll_rollup", "q_agg_moments", "q_agg_pareto",
-        "q_agg_quantile_rollup", "q_agg_regression", "q_agg_rfm",
-        "q_agg_skew_audit", "q_dq_benford", "q_dq_constraints",
-        "q_dq_referential_integrity", "q_embed_centroid",
-        "q_embed_covariance", "q_embed_norm", "q_embed_pca_project",
-        "q_embed_quantize_int8", "q_fn_bitwise",
-        "q_fn_datetime_extended", "q_fn_string_extended", "q_fn_trig",
-        "q_fn_try_safe", "q_fn_url", "q_graph_common_neighbors",
-        "q_graph_degree_stats", "q_graph_triangles",
-        "q_join_asof_nearest", "q_join_asof_tolerance",
-        "q_join_nullsafe", "q_join_pit_features", "q_join_skew_salted",
-        "q_llm_bm25", "q_llm_bpe_merges", "q_llm_chunk_stitch",
-        "q_llm_ingest_dedup", "q_llm_minhash_signatures",
-        "q_llm_span_mask", "q_llm_xent_unigram", "q_maintenance_zorder",
-        "q_multimodal_dhash", "q_multimodal_ppm_stats",
-        "q_multimodal_video_frames", "q_multimodal_wav_stats",
-        "q_sql_grouping_id", "q_text_rrf_fusion", "q_udf_sql_registered",
-        # round-6 driver sample (CORRECTNESS_r06.json, 50 keys, all
-        # green) — frozen r7; cumulative coverage 230/241. The 11
-        # remaining never-sampled keys (7 q_ts_*, q_wf_streaks, the r6
-        # theta pair, q_llm_bpe_encode) now sort FIRST so the r7 sample
-        # closes driver coverage at 100%.
-        "q_agg_stickiness", "q_anon_kanonymity",
-        "q_dq_sequence_gaps", "q_embed_dim_stats",
-        "q_embed_sign_bits", "q_join_dpp", "q_llm_cooccur_pmi",
-        "q_llm_dedup_cascade", "q_llm_dedup_paragraph",
-        "q_llm_dedup_prefix", "q_llm_domain_budget",
-        "q_llm_global_shuffle", "q_llm_heavy_hitters",
-        "q_llm_mix_datasets", "q_llm_novelty", "q_llm_shard_assign",
-        "q_llm_source_overlap", "q_llm_tfidf_cosine",
-        "q_llm_token_len_hist", "q_llm_vocab_growth",
-        "q_llm_winnowing", "q_llm_xent_bigram",
-        "q_maintenance_compact", "q_multimodal_resize",
-        "q_pattern_timeout", "q_pattern_transitions",
-        "q_sample_group_topk_hash", "q_sample_importance",
-        "q_sample_temperature", "q_scan_merge_schema",
-        "q_scan_partitioned_roundtrip", "q_scan_text_roundtrip",
-        "q_session_stats", "q_sql_division", "q_sql_q11",
-        "q_sql_q12", "q_sql_q16", "q_sql_q2", "q_sql_q20",
-        "q_sql_q21", "q_sql_q22", "q_sql_q9",
-        "q_text_halves_overlap", "q_text_repetition", "q_ts_ewma",
-        "q_ts_resample_interp", "q_window_distinct_users",
-        "q_window_ohlc", "q_window_rate_anomaly",
-        "q_window_topk_types",
-        # round-7 driver sample (CORRECTNESS_r07.json, 50 keys, all
-        # green) — frozen r8; cumulative coverage 246/246. New r8 keys
-        # are the only never-sampled tier and sort first.
-        "q_ab_welch_ttest", "q_agg_approx_percentile",
-        "q_agg_argminmax", "q_agg_bitops", "q_agg_bool",
-        "q_agg_cohort_ltv", "q_agg_collect", "q_agg_countdistinct",
-        "q_agg_cube", "q_agg_entropy", "q_agg_global", "q_agg_group",
-        "q_agg_groupingsets", "q_agg_having", "q_agg_histogram",
-        "q_agg_hll_rollup", "q_agg_moments", "q_agg_pareto",
-        "q_agg_percentile", "q_agg_quantile_rollup",
-        "q_agg_regression", "q_agg_rollup", "q_agg_salted",
-        "q_agg_skew_audit", "q_agg_stats_family", "q_cogroup_stats_agg",
-        "q_dq_benford", "q_embed_covariance", "q_join_theta_pctile",
-        "q_join_theta_sum", "q_llm_ann_lsh_query", "q_llm_ann_query",
-        "q_llm_bpe_encode", "q_llm_ingest_neardup",
-        "q_llm_dedup_semantic", "q_llm_dedup_semantic_ivf", "q_sql_q4",
-        "q_ts_autocorr", "q_ts_cusum", "q_ts_decimate_minmax",
-        "q_ts_lateness", "q_ts_outlier_mad", "q_ts_outlier_rolling",
-        "q_ts_seasonal_profile", "q_wf_streaks",
-        # round-9 driver sample (CORRECTNESS_r09.json, 50 keys, all
-        # green) — frozen r10; cumulative coverage 254/254. Only the
-        # six r9-new keys were missing from the earlier tiers; the r10
-        # additions (q_llm_ivf_retrain, q_maintenance_compact_subset)
-        # are now the sole never-sampled tier and sort first.
-        "q_llm_ivf_upsert", "q_llm_lsh_delete", "q_llm_lsh_upsert",
-        "q_llm_store_compact", "q_llm_store_upsert", "q_ts_znorm_topk",
-        # round-10 driver sample (CORRECTNESS_r10.json, 50 keys, all
-        # green) — frozen r11; cumulative coverage 266/266. The twelve
-        # r10-new keys join here; the four r11 additions
-        # (q_store_snapshot_isolation, q_llm_pq_upsert/q_llm_pq_delete,
-        # q_mv_approx_distinct) are now the never-sampled tier and
-        # sort first.
-        "q_llm_forget", "q_llm_ivf_retrain", "q_llm_ivfpq_filtered",
-        "q_llm_ivfpq_query", "q_llm_ivfpq_retrain",
-        "q_llm_ivfpq_upsert", "q_llm_pq_encode", "q_llm_pq_query",
-        "q_maintenance_compact_subset", "q_mv_epoch_refresh",
-        "q_mv_incremental", "q_mv_retract",
-    }
-)
+# Driver priority. The driver samples ~50 keys per round in dict order,
+# so queries() yields highest-evidence-value keys first: keys never named
+# in a committed driver CORRECTNESS_r*.json at the repo root, then
+# evidence-STALE keys, then the rest; registration order breaks ties.
+_REPO_ROOT = Path(__file__).resolve().parents[2]
 
 
-# Modules holding the round-4/5 additions — the keys with zero driver
-# evidence AND the newest code; they sample first within the
-# never-sampled tier (registration order is module-alphabetical, so
-# "newest" must come from the module, not the index).
-_NEWEST_MODULES = (
-    "flink_quickstart_spark.plans.analytics_r5",
-    "flink_quickstart_spark.plans.analytics_ext",
-)
-_NEWEST_EXTRA = frozenset({"q_graph_common_neighbors"})  # r4, lives in graph.py
+@functools.cache
+def _ever_driver_sampled() -> frozenset[str]:
+    """Every key any committed driver CORRECTNESS_r*.json has sampled
+    (the files' top-level keys); read once, on first ordering."""
+    return frozenset(
+        key
+        for path in _REPO_ROOT.glob("CORRECTNESS_r*.json")
+        for key in json.loads(path.read_text())
+    )
+
 
 # r8 (VERDICT r7 #6): cumulative coverage hit 246/246 in r7, so the new
 # axis is RECENCY — keys whose last driver sample predates later
@@ -270,21 +135,20 @@ _STALE_RANK = {n: i for i, n in enumerate(_STALE_PRIORITY)}
 
 
 def _driver_order(names) -> list[str]:
-    """Never-driver-sampled keys first — round-4/5 additions ahead of
-    the older backlog — then evidence-STALE keys (stalest first, the r8
-    recency backlog), then the rest in registration order."""
-    names = list(names)
+    """Never-driver-sampled keys first, then evidence-STALE keys
+    (stalest first, the r8 recency backlog), then the rest; registration
+    order within each tier."""
+    rank = {n: i for i, n in enumerate(names)}
+    sampled = _ever_driver_sampled()
 
     def tier(n: str):
-        if n not in _EVER_DRIVER_SAMPLED:
-            mod = REGISTRY[n].builder.__module__
-            t = 0 if (mod in _NEWEST_MODULES or n in _NEWEST_EXTRA) else 1
-            return (t, names.index(n))
+        if n not in sampled:
+            return (0, rank[n])
         if n in _STALE_RANK:
-            return (2, _STALE_RANK[n])
-        return (3, names.index(n))
+            return (1, _STALE_RANK[n])
+        return (2, rank[n])
 
-    return sorted(names, key=tier)
+    return sorted(rank, key=tier)
 
 
 def queries() -> dict[str, Builder]:

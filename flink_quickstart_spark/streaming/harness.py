@@ -170,6 +170,19 @@ def foreach_batch_with_late_side_output(
     return df.writeStream.foreachBatch(handle)
 
 
+def _write_epoch(df: DataFrame, batch_id: int, out_dir: str) -> None:
+    """Write ``df`` as the ``out_dir/batch_id=<n>/`` partition by
+    dynamic overwrite: a re-delivered epoch replaces its own partition
+    and never duplicates rows."""
+    (
+        df.withColumn("batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(out_dir)
+    )
+
+
 def idempotent_foreach_batch(out_dir: str):
     """I13 exactly-once custom sink: epoch-partitioned overwrite.
 
@@ -185,13 +198,7 @@ def idempotent_foreach_batch(out_dir: str):
     """
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
+        _write_epoch(batch_df, batch_id, out_dir)
 
     return handle
 
@@ -236,13 +243,7 @@ def foreach_batch_index_query(
             id_col=id_col,
             vec_col=vec_col,
         )
-        (
-            matches.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
+        _write_epoch(matches, batch_id, out_dir)
 
     return handle
 
@@ -341,25 +342,13 @@ def foreach_batch_ingest_admission(
                 before_epoch=(int(batch_id) + 1) if epoch_store else None,
             ).localCheckpoint(eager=True)
             try:
-                (
-                    pairs.withColumn("batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("batch_id")
-                    .parquet(flagged_dir)
-                )
+                _write_epoch(pairs, batch_id, flagged_dir)
                 admitted = batch.join(
                     pairs.select(F.col("new_id").alias(id_col)).distinct(),
                     id_col,
                     "left_anti",
                 )
-                (
-                    admitted.withColumn("batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("batch_id")
-                    .parquet(admitted_dir)
-                )
+                _write_epoch(admitted, batch_id, admitted_dir)
                 last = -1
                 if os.path.exists(marker):
                     with open(marker) as fh:

@@ -59,3 +59,29 @@ def test_contract_shape():
     os_ = e.oracle_sql()
     assert set(os_) <= set(qs)
     assert len(qs) >= 20
+
+
+def test_never_sampled_keys_sort_first(monkeypatch):
+    """The driver samples queries() in order: no key a committed
+    CORRECTNESS_r*.json has sampled may sort ahead of a key none has,
+    including one registered last."""
+    import json
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parents[1]
+    sampled = {
+        key
+        for path in repo.glob("CORRECTNESS_r*.json")
+        for key in json.loads(path.read_text())
+    }
+    assert sampled, "no committed CORRECTNESS_r*.json found"
+    fresh = "q_zz_never_sampled"
+    monkeypatch.setitem(
+        registry.REGISTRY,
+        fresh,
+        registry.QuerySpec(name=fresh, builder=lambda spark, sf: None, oracle=None),
+    )
+    order = list(registry.queries())
+    never = [k for k in order if k not in sampled]
+    assert fresh in never
+    assert order[: len(never)] == never, order[: len(never) + 5]

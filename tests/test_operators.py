@@ -315,22 +315,25 @@ def test_native_python_udtf_lateral(spark):
 
 
 def test_observe_quality_metrics(spark):
-    """Flink-metrics analog: in-plan observation counts rows and nulls
-    with zero extra passes, and agrees with explicit recomputation."""
-    from flink_quickstart_spark.observability import observe_quality
+    """Flink-metrics analog: ``DataStream.with_metrics`` (in-plan
+    ``DataFrame.observe``) counts rows and nulls with zero extra passes,
+    and agrees with explicit recomputation."""
+    from flink_quickstart_spark.api import DataStream, StreamExecutionEnvironment
     from flink_quickstart_spark.sources.tables import load_tables
 
+    env = StreamExecutionEnvironment.get_execution_environment(spark)
     ev = load_tables(spark, SF_DIR).events.withColumn(
         "maybe", F.when(F.col("value") > 100, F.col("value"))
     )
-    inst, get_metrics = observe_quality(
-        ev,
+    inst = DataStream(ev, env).with_metrics(
         "quality",
-        null_cols=["maybe"],
-        extra={"sum_value": F.round(F.sum("value"), 2)},
+        n_rows=F.count(F.lit(1)),
+        n_null_maybe=F.sum(F.when(F.col("maybe").isNull(), 1).otherwise(0)),
+        sum_value=F.round(F.sum("value"), 2),
     )
-    n_out = inst.where(F.col("event_type") != "__none__").count()  # one action
-    m = get_metrics()
+    # one action over a downstream frame fills every metric
+    n_out = inst.filter(F.col("event_type") != "__none__").to_df().count()
+    m = env.metrics("quality")
     assert m["n_rows"] == ev.count() == n_out
     assert m["n_null_maybe"] == ev.where(F.col("maybe").isNull()).count()
     assert m["sum_value"] == round(

@@ -7,6 +7,7 @@ raises instead of returning a partial sink)."""
 from __future__ import annotations
 
 import re
+import sys
 import uuid
 
 import pytest
@@ -137,7 +138,7 @@ def test_checkpoint_keeps_its_recorded_partition_count(sized, tmp_path):
     assert _rows(spark.table(name)) == _rows(_windowed(env.read_parquet(src)))
 
 
-@pytest.mark.parametrize("sink", ["memory", "parquet"])
+@pytest.mark.parametrize("sink", ["memory", "parquet", "example"])
 def test_harness_timeout_stops_query_and_raises(spark, tmp_path, monkeypatch, sink):
     running = {q.id for q in spark.streams.active}
     monkeypatch.setattr(StreamingQuery, "awaitTermination", lambda self, t=None: False)
@@ -145,8 +146,18 @@ def test_harness_timeout_stops_query_and_raises(spark, tmp_path, monkeypatch, si
     with pytest.raises(TimeoutError):
         if sink == "memory":
             harness.run_to_memory(stream, query_name=f"to_{uuid.uuid4().hex[:8]}")
-        else:
+        elif sink == "parquet":
             harness.write_stream_parquet(
                 stream, str(tmp_path / "out"), str(tmp_path / "ckpt")
             )
+        else:
+            # the shipped streaming example must not read a partial sink
+            from examples import streaming_window_job
+
+            monkeypatch.setattr(
+                sys, "argv", ["streaming_window_job", SF_DIR, str(tmp_path / "out")]
+            )
+            # the shared session, not get_spark's unsized defaults on it
+            monkeypatch.setattr(streaming_window_job, "get_spark", lambda **_: spark)
+            streaming_window_job.main()
     assert {q.id for q in spark.streams.active} <= running

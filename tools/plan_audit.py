@@ -28,8 +28,6 @@ from __future__ import annotations
 
 import argparse
 import ast
-import contextlib
-import io
 import re
 import sys
 from pathlib import Path
@@ -484,23 +482,19 @@ def main() -> int:
     ap.add_argument("--sf", default="/root/testdata/sf0.001")
     args = ap.parse_args()
 
-    from flink_quickstart_spark import get_spark
-    from flink_quickstart_spark.plans import load_all, registry
+    sys.path.insert(0, str(Path(__file__).resolve().parent))
+    from sweep import explain, open_session
 
-    load_all()
-    spark = get_spark(app_name="plan-audit")
+    from flink_quickstart_spark.plans import registry
+
+    spark, _ = open_session("plan-audit", args.sf)
     n_bad = n_waived = 0
     for key in sorted(registry.REGISTRY):
         try:
             df = registry.REGISTRY[key].builder(spark, args.sf)
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain(mode="formatted")
-            findings = audit_plan(buf.getvalue())
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain()  # simple mode: tree with scan locations
-            findings.extend(audit_unbroadcast_dims(buf.getvalue()))
+            findings = audit_plan(explain(df))
+            # simple mode: tree with scan locations
+            findings.extend(audit_unbroadcast_dims(explain(df, "simple")))
         except Exception as e:  # noqa: BLE001
             print(f"ERROR {key}: {type(e).__name__}: {e}")
             n_bad += 1

@@ -7,15 +7,14 @@ Run: ``python tools/plan_report.py``  (rewrites docs/PLANS.md)
 
 from __future__ import annotations
 
-import contextlib
-import io
 import sys
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-from flink_quickstart_spark import get_spark
-from flink_quickstart_spark.plans import load_all, registry
+from sweep import explain, open_session  # noqa: E402
+
+from flink_quickstart_spark.plans import registry  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.1"
 KEYS = (
@@ -59,16 +58,13 @@ Generated by ``python tools/plan_report.py`` at sf0.1. What to look for
 
 
 def main() -> None:
-    load_all()
-    spark = get_spark(app_name="plan-report")
-    spark.sparkContext.setLogLevel("ERROR")
+    # sized like every other sf0.1 entry point (bench.py, perfbench,
+    # verify_local): the plans show the data-sized exchange count
+    spark, _ = open_session("plan-report", SF_DIR)
     out = [HEADER]
     for key in KEYS:
-        df = registry.REGISTRY[key].builder(spark, SF_DIR)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain(mode="formatted")
-        out.append(f"\n## {key}\n\n```\n{buf.getvalue().strip()}\n```\n")
+        text = explain(registry.REGISTRY[key].builder(spark, SF_DIR))
+        out.append(f"\n## {key}\n\n```\n{text.strip()}\n```\n")
     path = Path(__file__).resolve().parents[1] / "docs" / "PLANS.md"
     path.write_text("".join(out))
     print(f"wrote {path}")

@@ -8,8 +8,12 @@ builds, parquet footer reads) deflate the ratio well below 10, so the
 interesting signal is any key ABOVE it. Superlinear keys get fixed and
 re-probed (VERDICT r4 item #1; the wedge-rule episode is the precedent).
 
-Run: ``python tools/scale_curve.py [--keys k1,k2] [--json PATH] [--fit]``
+Run: ``python tools/scale_curve.py [--keys k1,k2] [--json PATH] [--runs N]
+[--fit] [--xl] [--decade text|relational]``
 Writes per-key {sf0.1 sec, sf1 sec, ratio} and flags ratio > threshold.
+Every point is ``sweep.measure``: a cold run, then the best of ``--runs``
+timed runs, each consumed by an observed count + noop write. With
+``--keys`` and an existing ``--json`` the run merges into that record.
 
 ``--fit`` adds a THIRD measurement point (sf0.01) and the
 ratio-of-ratios detector for overhead-masked superlinearity — the class
@@ -23,25 +27,55 @@ an asymptotically superlinear term EVEN when every pairwise ratio looks
 tame — exactly the overhead-masked quadratic signature (a fully
 amortized quadratic instead shows r12 ≈ 100 and trips the plain ratio
 threshold; the two detectors are complementary).
+
+``--xl`` adds a 4th point (the staged sf3, ``make_sf.py 30``) and the
+per-segment exponent e23 = log(r23)/log(3); flags r23 > 3·LINEAR_SLACK.
+
+``--decade text|relational`` measures a TRUE decade at the top end
+instead, sf1 → a 100× staging, where fixed overhead is noise:
+
+- ``text``: the documents/embeddings tier against ``.scale/sf10text``
+  (``make_sf.py 100 .scale/sf10text documents,embeddings
+  fill_from=<repo>/.scale/sf1`` — only the text tables are scaled, the
+  rest are symlinks to sf1, so only text keys are meaningful there);
+- ``relational``: the join/agg/window/graph tier against a full
+  ``make_sf.py 100 .scale/sf10`` staging.
+
+It records r_decade and e_decade = log10(r_decade), flags r_decade above
+the same slack with the same waiver table, and gives a key at the
+linear bound (e ≥ 1.0) the status ``linear_at_bound`` only with a
+written output law (``DECADE_OUTPUT_LAWS``); without one it flags.
+That rule is decade-only: a curve segment is too short for it.
+
+The status rules are pure functions of the recorded seconds
+(``grade_curve`` / ``grade_decade``); tests re-derive every committed
+status from them.
 """
 
 from __future__ import annotations
 
 import argparse
-import json
+import math
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
+sys.path.insert(0, str(REPO / "tools"))
 
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F  # noqa: E402
 
-from flink_quickstart_spark import get_spark
-from flink_quickstart_spark.operators.maintenance import store_data_dir as _sdd
-from flink_quickstart_spark.plans import load_all, registry
-from flink_quickstart_spark.session import dir_bytes, shuffle_partitions_for_bytes
+from sweep import (  # noqa: E402
+    load_stamp,
+    measure,
+    merged,
+    open_session,
+    select_keys,
+    write_json,
+)
+
+from flink_quickstart_spark.operators.maintenance import store_data_dir as _sdd  # noqa: E402
+from flink_quickstart_spark.plans import registry  # noqa: E402
 
 SF_TINY = "/root/testdata/sf0.01"
 SF_SMALL = "/root/testdata/sf0.1"
@@ -310,6 +344,133 @@ DEFAULT_KEYS = [
     # q_store_snapshot_isolation above.
     "q_llm_opq_encode", "q_llm_opq_query",
 ]
+
+# --decade: the 100× staging each tier is measured against, from sf1
+DECADE_DIRS = {
+    "text": str(REPO / ".scale" / "sf10text"),
+    "relational": str(REPO / ".scale" / "sf10"),
+}
+DECADE_KEYS = {
+    # documents/embeddings-only keys (verified via builder source scan)
+    # — the heavy text tier plus the ANN component probes
+    "text": [
+        "q_llm_neardup_minhash",
+        "q_llm_dedup_groups",
+        "q_llm_minhash_signatures",
+        "q_llm_dedup_spans",
+        "q_llm_winnowing",
+        "q_llm_decontaminate",
+        "q_llm_bpe_encode",
+        "q_text_langid_ngram",
+        "ann_ivf_build",
+        "ann_ivf_query_fixed",
+        "semantic_ivf_cc",
+        # r8: the capped fixed-batch LSH production shape (VERDICT r7 #1)
+        "ann_lsh_build",
+        "ann_lsh_query_fixed",
+        # r8b: incremental ingest near-dup vs the persisted signature store
+        "q_llm_ingest_neardup",
+        # r9: incremental index maintenance — fixed-batch upsert cost must
+        # stay ~flat as the corpus decade-grows (VERDICT r8 #1)
+        "ann_lsh_upsert_fixed",
+        "minhash_store_upsert_fixed",
+        # r10: the periodic linear op (retrain) and the nightly window
+        # (fixed-batch upsert + threshold compaction of touched buckets)
+        "ann_ivf_retrain",
+        "minhash_store_maintain_fixed",
+        # r10b: PQ compressed-scan query path (fixed 64-query batch)
+        "pq_query_fixed",
+        # r10c/d: IVFPQ — pruned+compressed fixed-batch query,
+        # batch-priced upsert, and the metadata-filtered variant
+        # (predicate only shrinks the pruned scan)
+        "ann_ivfpq_query_fixed",
+        "ann_ivfpq_upsert_fixed",
+        "ann_ivfpq_filtered_fixed",
+    ],
+    # the heaviest join / agg / window / theta / iterative keys — the
+    # tiers the text decade can't see
+    "relational": [
+        "q_agg_group",
+        "q_join_star",
+        "q_window_tumbling",
+        "q_window_session",
+        "q_topk_pergroup",
+        "q_fn_json",
+        "q_agg_rfm",
+        "q_agg_approxcd",
+        "q_cogroup_stats_agg",
+        "q_sql_q21",
+        "q_join_theta",
+        "q_graph_pagerank",
+        "q_graph_components",
+        "q_graph_common_neighbors",
+        "q_sessionize_gaps_islands",
+        "q_merge_upsert",
+        # r9 (VERDICT r8 #7): fuzzy-match reads CUSTOMER (which the text
+        # staging fills unscaled from sf1), so its 100× measurement
+        # belongs to this tier; the deletion-neighborhood blocking must
+        # hold the r6 fix at the decade
+        "q_text_fuzzy_match",
+        # r10e: incremental MV maintenance — the fixed-batch refresh must
+        # stay ~flat across the decade (bucket count sized to the corpus
+        # at build time); the registered keys add the staging + oracle
+        # sides (linear: one orders groupBy each)
+        "mv_refresh_fixed",
+        "q_mv_incremental",
+        "q_mv_retract",
+        "q_mv_epoch_refresh",
+    ],
+}
+
+# r8 (VERDICT r7 #7): decade keys whose exponent sits AT the linear
+# bound (e ≥ 1.0) pass the 15× gate but deserve an explicit status and
+# a quantified output law, not a bare "ok" — each entry documents WHY
+# r ≈ growth is the floor for that key. A key measuring e ≥ 1.0 without
+# an entry here (or in DOCUMENTED_SUPERLINEAR) is recorded
+# `linear_at_bound_undocumented` and counts as a flag.
+DECADE_OUTPUT_LAWS = {
+    "q_graph_common_neighbors": (
+        "output-bound at exactly the data's growth law: common-neighbor "
+        "pairs are the wedge count Σ_w C(deg(w),2); the staged decade is "
+        "key-shifted DISJOINT copies, so wedges — and thus output — grow "
+        "exactly 10×. r ≈ 10 IS the linear envelope; per-wedge cost is "
+        "constant (equi-join on node id, never all-pairs)"
+    ),
+    "q_window_session": (
+        "output-bound: 10× users emit ~10× sessions (sessions are "
+        "per-user; the staged decade grows users, not per-user event "
+        "density), and the plan is one shuffle on user_id with no "
+        "cross-user state — r ≈ 10 is the output floor"
+    ),
+    "q_llm_winnowing": (
+        "output-bound: winnowing fingerprints are per-document rows "
+        "(constant per doc), so 10× docs emit 10× fingerprints and the "
+        "shared-fingerprint join output grows with the planted near-dup "
+        "structure — also exactly 10× on disjoint-vocabulary staging"
+    ),
+    "q_llm_neardup_minhash": (
+        "output-bound: verified near-dup pairs grow exactly 10× on the "
+        "disjoint-vocabulary staging (measured r8: 2 560 → 25 600 "
+        "candidates AND verified pairs after the slot-universe fix), so "
+        "r ≈ 10 is the floor; the residual above 10 is the shingle "
+        "verify join's constant, not a growth term"
+    ),
+    "q_llm_dedup_groups": (
+        "output-bound: near-dup pair edges and the resulting clusters "
+        "grow exactly 10× on disjoint-vocabulary staging; the min-label "
+        "CC loop shuffles on node id with iteration count fixed by the "
+        "(unchanged) cluster diameter"
+    ),
+    "q_sessionize_gaps_islands": (
+        "output-bound: sessions are per-user rows and the staged decade "
+        "grows USERS 10× (per-user event density unchanged), so session "
+        "output grows exactly 10×; the plan is one shuffle on user_id "
+        "(gaps-and-islands lag window + per-session agg) with no "
+        "cross-user state — r ≈ 10 is the output floor (same law as "
+        "q_window_session; measured e 1.01 r9, 0.91 r8 — probe noise "
+        "around the bound)"
+    ),
+}
 
 
 # ---------------------------------------------------------------------------
@@ -929,52 +1090,128 @@ COMPONENT_PROBES = {
 }
 
 
-def classify_big_sf_exception(e: Exception) -> str:
-    """ONLY the repo's explicit budget guard (the fail-fast ValueError
-    from operators/similarity._collect_corpus) is a DESIGNED refusal at
-    scale. Anything else — Py4JJavaError, OOM, analysis error, any
-    other ValueError — is a crash (r5 judge finding: a broadcast OOM
-    was once mislabeled "guarded" by a charitable catch-all).
-    Regression-locked by tests/test_scale_curve_classifier.py."""
-    if isinstance(e, ValueError) and "broadcast budget" in str(e):
-        return "guarded"
-    return "error_big"
+def _ok(point) -> bool:
+    return point["status"] == "ok"
 
 
-# Keys whose OUTPUT is row-heavy at big stagings (≳ GiB of result rows)
-# — the probe grades the PLAN, so these are consumed with an engine-side
-# count aggregate instead of a driver collect, exactly the rule the
-# COMPONENT_PROBES already follow for candidate-pair outputs. A full
-# driver collect of such a key dies on spark.driver.maxResultSize (r9:
-# q_text_fuzzy_match at the 100× staging produced > 1 GiB of lev-1
-# name-pair rows — Customer#NNNNNNNNN names give every customer a
-# ~constant digit-substitution neighborhood, so pairs ∝ customers).
-ENGINE_SIDE_CONSUME = {
-    "q_text_fuzzy_match": (
-        "pairs ∝ customers (digit-neighborhood law of the synthetic "
-        "names); grade the blocked join + verify plan, not a GiB-scale "
-        "driver materialization no deployment would do"
-    ),
-}
-
-
-def _run(builder, spark, sf, key=None):
-    res = builder(spark, sf)
-    if res is not None:  # side-effecting probes (index build) return None
-        if key in ENGINE_SIDE_CONSUME:
-            res.agg(F.count(F.lit(1))).collect()
+def grade_curve(key, small, big, tiny=None, xl=None) -> dict:
+    """The curve record of one key from its ``sweep.measure`` points at
+    sf0.1 / sf1 / sf0.01 (``--fit``) / sf3 (``--xl``); ``None`` for a
+    point not measured. Pure: every status follows from the recorded
+    seconds and which points failed."""
+    if not _ok(small):
+        # an outright-broken key must fail the probe loudly, not read as
+        # a clean skip (ADVICE r5)
+        return {"status": "error_small", "err": small["err"]}
+    if not _ok(big):
+        return {
+            "status": "guarded" if big["status"] == "guarded" else "error_big",
+            "sf0.1_sec": small["best"],
+            "err": big["err"],
+        }
+    t_small, t_big = small["best"], big["best"]
+    ratio = t_big / t_small if t_small > 0 else float("inf")
+    flag = ratio > GROWTH * LINEAR_SLACK
+    rec = {
+        "status": "superlinear" if flag else "ok",
+        "sf0.1_sec": t_small,
+        "sf1_sec": t_big,
+        "ratio": round(ratio, 2),
+    }
+    if tiny is not None and not _ok(tiny):
+        # a key that crashes at the TINY scale loses its acceleration
+        # check entirely — a probe failure, not a fit.err footnote
+        # (ADVICE r6)
+        rec["fit"] = {"err": tiny["err"]}
+        rec["status"] = "error_tiny"
+    elif tiny is not None and tiny["best"]:
+        r01 = t_small / tiny["best"]
+        accel = ratio / r01 if r01 > 0 else float("inf")
+        accelerating = accel > ACCEL_MAX
+        flag = flag or accelerating
+        rec["fit"] = {
+            "sf0.01_sec": tiny["best"],
+            "r01": round(r01, 2),
+            "r12": round(ratio, 2),
+            "accel": round(accel, 2),
+            "accelerating": accelerating,
+        }
+        if accelerating:
+            rec["status"] = "superlinear"
+    if xl is not None and not _ok(xl):
+        if xl["status"] == "guarded":
+            rec["xl"] = {"status": "guarded", "err": xl["err"]}
         else:
-            res.collect()
+            rec["xl"] = {"status": "error_xl", "err": xl["err"]}
+            rec["status"] = "error_xl"
+    elif xl is not None and xl["best"]:
+        r23 = xl["best"] / t_big if t_big > 0 else float("inf")
+        # per-segment growth exponent: cost ~ n^e23 over the sf1→sf3
+        # step, where fixed overheads matter least
+        e23 = math.log(max(r23, 1e-9)) / math.log(GROWTH_XL)
+        xl_flag = r23 > GROWTH_XL * LINEAR_SLACK
+        rec["xl"] = {
+            "sf3_sec": xl["best"],
+            "r23": round(r23, 2),
+            "e23": round(e23, 2),
+            "superlinear": xl_flag,
+        }
+        if xl_flag:
+            rec["status"] = "superlinear"
+            flag = True
+    if flag and key in DOCUMENTED_SUPERLINEAR:
+        rec["status"] = "superlinear_documented"
+        rec["waiver"] = DOCUMENTED_SUPERLINEAR[key]
+    return rec
 
 
-def best_of(builder, spark, sf, runs=2, key=None):
-    _run(builder, spark, sf, key)  # warm-up
-    best = float("inf")
-    for _ in range(runs):
-        t0 = time.time()
-        _run(builder, spark, sf, key)
-        best = min(best, time.time() - t0)
-    return best
+def grade_decade(key, base, decade) -> dict:
+    """The decade record of one key from its ``sweep.measure`` points at
+    sf1 and the 100× staging. Pure, like :func:`grade_curve`."""
+    if not _ok(base):
+        return {"status": "error_base", "err": base["err"]}
+    if not _ok(decade):
+        return {
+            "status": "guarded" if decade["status"] == "guarded" else "error_decade",
+            "sf1_sec": base["best"],
+            "err": decade["err"],
+        }
+    t_base, t_dec = base["best"], decade["best"]
+    r = t_dec / t_base if t_base > 0 else float("inf")
+    e_dec = math.log(max(r, 1e-9)) / math.log(GROWTH)
+    flag = r > GROWTH * LINEAR_SLACK
+    rec = {
+        "status": "superlinear" if flag else "ok",
+        "sf1_sec": t_base,
+        "decade_sec": t_dec,
+        "r_decade": round(r, 2),
+        "e_decade": round(e_dec, 2),
+    }
+    if flag and key in DOCUMENTED_SUPERLINEAR:
+        rec["status"] = "superlinear_documented"
+        rec["waiver"] = DOCUMENTED_SUPERLINEAR[key]
+    elif not flag and e_dec >= 1.0:
+        # at the linear bound: passes the gate, but a bare "ok"
+        # under-describes it — attach the quantified output law, or flag
+        # the key until one is written (VERDICT r7 #7)
+        law = DECADE_OUTPUT_LAWS.get(key) or DOCUMENTED_SUPERLINEAR.get(key)
+        if law:
+            rec["status"] = "linear_at_bound"
+            rec["output_law"] = law
+        else:
+            rec["status"] = "linear_at_bound_undocumented"
+    return rec
+
+
+FLAGGED = ("superlinear", "linear_at_bound_undocumented")
+
+
+def _failed(rec) -> bool:
+    return (
+        rec["status"].startswith("error")
+        or "err" in rec.get("fit", {})
+        or rec.get("xl", {}).get("status") == "error_xl"
+    )
 
 
 def main() -> int:
@@ -994,151 +1231,60 @@ def main() -> int:
         "e23 = log(r23)/log(3); flags r23 > 3*LINEAR_SLACK",
     )
     ap.add_argument(
-        "--merge-json", action="store_true",
-        help="with --json and --keys: preload the existing JSON and "
-        "merge this run's entries into it (targeted re-probe)",
+        "--decade", choices=sorted(DECADE_DIRS),
+        help="measure sf1 against the tier's 100x staging instead of "
+        "the curve (text: .scale/sf10text, relational: .scale/sf10)",
     )
     args = ap.parse_args()
+    if args.decade and (args.fit or args.xl):
+        ap.error("--fit/--xl add curve points; they do not apply to --decade")
 
-    load_all()
-    keys = args.keys.split(",") if args.keys else DEFAULT_KEYS
-    size_sf = SF_XL if args.xl else SF_BIG
-    parts = shuffle_partitions_for_bytes(dir_bytes(size_sf))
-    spark = get_spark(app_name="scale-curve", shuffle_partitions=parts)
-    spark.sparkContext.setLogLevel("ERROR")
-    print(f"shuffle_partitions={parts} (sized for {size_sf} = {dir_bytes(size_sf)/1e6:.0f} MB)")
+    if args.decade:
+        sfs = {"sf1": SF_BIG, "decade": DECADE_DIRS[args.decade]}
+        default = DECADE_KEYS[args.decade]
+    else:
+        sfs = {"sf0.1": SF_SMALL, "sf1": SF_BIG}
+        if args.fit:
+            sfs["sf0.01"] = SF_TINY
+        if args.xl:
+            sfs["sf3"] = SF_XL
+        default = DEFAULT_KEYS
+    sized_for = sfs.get("decade") or sfs.get("sf3") or SF_BIG
+    spark, sizing = open_session("scale-curve", sized_for)
+    known = set(registry.REGISTRY) | set(COMPONENT_PROBES)
+    keys = select_keys(ap, args.keys, known, default)
+    stamp = load_stamp()
 
     results: dict[str, dict] = {}
-    if args.merge_json and args.json and args.keys and Path(args.json).exists():
-        prior = json.loads(Path(args.json).read_text()).get("keys", {})
-        results = {
-            k: v
-            for k, v in prior.items()
-            if k in registry.REGISTRY or k in COMPONENT_PROBES
-        }
-    n_flag = 0
-    n_fail = 0
     for key in keys:
         if key in COMPONENT_PROBES:
             prep, b = COMPONENT_PROBES[key]
             if prep is not None:
-                sfds = [SF_SMALL, SF_BIG]
-                if args.fit:
-                    sfds.append(SF_TINY)
-                if args.xl:
-                    sfds.append(SF_XL)
-                for sfd in sfds:
+                for sfd in sfs.values():
                     prep(spark, sfd)  # untimed: build-once artifacts
         else:
             b = registry.REGISTRY[key].builder
-        try:
-            t_small = best_of(b, spark, SF_SMALL, args.runs, key)
-        except Exception as e:  # noqa: BLE001
-            # an outright-broken key must fail the probe loudly, not
-            # read as a clean skip (ADVICE r5)
-            print(f"FAIL {key}: sf0.1 error {type(e).__name__}: {e}")
-            results[key] = {"status": "error_small", "err": str(e)[:200]}
-            n_fail += 1
-            continue
-        try:
-            t_big = best_of(b, spark, SF_BIG, args.runs, key)
-        except Exception as e:  # noqa: BLE001
-            status = classify_big_sf_exception(e)
-            if status == "guarded":
-                print(f"GUARDED {key}: sf1 refused: {str(e)[:160]}")
-            else:
-                print(f"FAIL {key}: sf1 crashed: {type(e).__name__}: {str(e)[:160]}")
-                n_fail += 1
-            results[key] = {
-                "status": status,
-                "sf0.1_sec": round(t_small, 3),
-                "err": str(e)[:200],
-            }
-            continue
-        ratio = t_big / t_small if t_small > 0 else float("inf")
-        flag = ratio > GROWTH * LINEAR_SLACK
-        rec = {
-            "status": "superlinear" if flag else "ok",
-            "sf0.1_sec": round(t_small, 3),
-            "sf1_sec": round(t_big, 3),
-            "ratio": round(ratio, 2),
-        }
-        marker = " <-- SUPERLINEAR" if flag else ""
-        if args.fit:
-            try:
-                t_tiny = best_of(b, spark, SF_TINY, args.runs, key)
-            except Exception as e:  # noqa: BLE001
-                # a key that crashes at the TINY scale loses its
-                # acceleration check entirely — that must count as a
-                # probe failure, not vanish into a fit.err footnote
-                # (ADVICE r6)
-                print(
-                    f"FAIL {key}: sf0.01 error (fit point lost): "
-                    f"{type(e).__name__}: {str(e)[:160]}"
-                )
-                rec["fit"] = {"err": str(e)[:200]}
-                rec["status"] = "error_tiny"
-                n_fail += 1
-                t_tiny = None
-            if t_tiny:
-                r01 = t_small / t_tiny
-                r12 = t_big / t_small
-                accel = r12 / r01 if r01 > 0 else float("inf")
-                accelerating = accel > ACCEL_MAX
-                flag = flag or accelerating
-                rec["fit"] = {
-                    "sf0.01_sec": round(t_tiny, 3),
-                    "r01": round(r01, 2),
-                    "r12": round(r12, 2),
-                    "accel": round(accel, 2),
-                    "accelerating": accelerating,
-                }
-                if accelerating:
-                    rec["status"] = "superlinear"
-                    marker = f" <-- ACCELERATING (accel {accel:.1f})"
-        if args.xl:
-            import math
-
-            try:
-                t_xl = best_of(b, spark, SF_XL, args.runs, key)
-            except Exception as e:  # noqa: BLE001
-                status = classify_big_sf_exception(e)
-                if status == "guarded":
-                    print(f"GUARDED {key}: sf3 refused: {str(e)[:160]}")
-                    rec["xl"] = {"status": "guarded", "err": str(e)[:200]}
-                else:
-                    print(
-                        f"FAIL {key}: sf3 crashed: "
-                        f"{type(e).__name__}: {str(e)[:160]}"
-                    )
-                    rec["xl"] = {"status": "error_xl", "err": str(e)[:200]}
-                    rec["status"] = "error_xl"
-                    n_fail += 1
-                t_xl = None
-            if t_xl:
-                r23 = t_xl / t_big if t_big > 0 else float("inf")
-                # per-segment growth exponent: cost ~ n^e23 over the
-                # sf1→sf3 step, where fixed overheads matter least
-                e23 = math.log(max(r23, 1e-9)) / math.log(GROWTH_XL)
-                xl_flag = r23 > GROWTH_XL * LINEAR_SLACK
-                rec["xl"] = {
-                    "sf3_sec": round(t_xl, 3),
-                    "r23": round(r23, 2),
-                    "e23": round(e23, 2),
-                    "superlinear": xl_flag,
-                }
-                if xl_flag:
-                    rec["status"] = "superlinear"
-                    marker += f" <-- XL SUPERLINEAR (e23 {e23:.2f})"
-                    flag = True
-        if flag and key in DOCUMENTED_SUPERLINEAR:
-            rec["status"] = "superlinear_documented"
-            rec["waiver"] = DOCUMENTED_SUPERLINEAR[key]
-            marker += " [documented]"
-            flag = False
-        n_flag += flag
+        # points in grading order; a failed point ends the key
+        points: dict[str, dict] = {}
+        for name, sfd in sfs.items():
+            points[name] = measure(spark, b, sfd, args.runs)
+            if not _ok(points[name]) and name in ("sf0.1", "sf1"):
+                break
+        if args.decade:
+            rec = grade_decade(key, points["sf1"], points.get("decade"))
+        else:
+            rec = grade_curve(
+                key, points["sf0.1"], points.get("sf1"),
+                points.get("sf0.01"), points.get("sf3"),
+            )
         results[key] = rec
-        print(f"{key}: {t_small:.2f}s -> {t_big:.2f}s  ratio {ratio:.1f}x{marker}")
+        secs = "  ".join(
+            f"{n} {p['best']}s" if _ok(p) else f"{n} {p['status'].upper()}"
+            for n, p in points.items()
+        )
+        print(f"{key}: {secs}  -> {rec['status']}", flush=True)
+        if "err" in rec:
+            print(f"    {rec['err'][:160]}")
 
     if _MINTED:
         print(f"cleanup: deleting {len(_MINTED)} minted upsert batches (untimed)")
@@ -1153,25 +1299,28 @@ def main() -> int:
             f"{len(_MV_REFRESHED)} sf(s) (untimed)"
         )
         cleanup_mv_refreshes(spark)
-    print(f"\n== {len(results)} keys probed, {n_flag} superlinear, {n_fail} failed (threshold {GROWTH * LINEAR_SLACK:.0f}x for {GROWTH:.0f}x data) ==")
+    n_flag = sum(v["status"] in FLAGGED for v in results.values())
+    n_fail = sum(_failed(v) for v in results.values())
+    print(
+        f"\n== {len(results)} keys probed, {n_flag} superlinear, {n_fail} "
+        f"failed (threshold {GROWTH * LINEAR_SLACK:.0f}x for {GROWTH:.0f}x data) =="
+    )
     if args.json:
-        with open(args.json, "w") as fh:
-            json.dump(
-                {
-                    "growth": GROWTH,
-                    "threshold_ratio": GROWTH * LINEAR_SLACK,
-                    "shuffle_partitions": parts,
-                    "sized_for_sf": size_sf,
-                    "method": "min-of-N warm collect() per key per sf; "
-                    "shuffle partitions recorded above (sized for the "
-                    "largest probed decade dir)",
-                    "keys": results,
-                },
-                fh,
-                indent=1,
-                sort_keys=True,
-            )
-        print(f"wrote {args.json}")
+        if args.keys:
+            results = merged(args.json, results, known)
+        meta = {
+            "growth": GROWTH,
+            "threshold_ratio": GROWTH * LINEAR_SLACK,
+            "runs": args.runs,
+            "method": "cold run + min of --runs warm runs per key per sf, "
+            "each consumed by DataFrame.observe(count) + a noop write (no "
+            "collect()); shuffle partitions sized for the largest probed dir",
+            **sizing,
+            **stamp,
+        }
+        if args.decade:
+            meta.update(set=args.decade, decade_dir=sfs["decade"])
+        write_json(args.json, meta, results)
     return 1 if (n_flag or n_fail) else 0
 
 
