@@ -9,6 +9,8 @@
   impossible to reintroduce silently.
 - ``measure``: the observed row count equals ``collect()``, a budget
   refusal is ``guarded``, and side-effect probes are timed only.
+- ``open_session`` runs the session's first job, so the first key's
+  cold time does not carry it.
 - Grading: every status in the committed curve and decade records
   re-derives from the recorded seconds.
 """
@@ -18,6 +20,7 @@ from __future__ import annotations
 import json
 import sys
 from pathlib import Path
+from types import SimpleNamespace
 
 import pytest
 
@@ -120,6 +123,23 @@ def test_measure_rows_guard_and_side_effect_probe(spark):
     probe = sweep.measure(spark, side_effect, SF_DIR, runs=2)
     assert probe["status"] == "ok" and probe["rows"] is None
     assert probe["best"] <= probe["cold"] and len(calls) == 3
+
+
+def test_open_session_runs_the_first_job(spark, monkeypatch):
+    """``spark.range(1).count()`` runs inside ``open_session``: two jobs,
+    as AQE runs the partial aggregate's map stage as a job of its own.
+    The session is a stub over the shared one, so the ERROR log level it
+    sets does not leak into later tests."""
+    levels: list[str] = []
+    stub = SimpleNamespace(
+        range=spark.range, sparkContext=SimpleNamespace(setLogLevel=levels.append)
+    )
+    monkeypatch.setattr(sweep, "get_spark", lambda **_: stub)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    assert sweep.open_session("sweep-test", SF_DIR)[0] is stub
+    assert len(set(tracker.getJobIdsForGroup()) - before) == 2
+    assert levels == ["ERROR"]
 
 
 def _point(rec: dict, sec_field: str, failed_status: str) -> dict:

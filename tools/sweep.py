@@ -4,8 +4,9 @@ all-keys sweep built on it.
 One mechanism per concern:
 
 - ``open_session`` — ``load_all``, a ``get_spark`` whose batch shuffle
-  count is sized for the largest directory the tool will read, and the
-  ERROR log level;
+  count is sized for the largest directory the tool will read, the
+  ERROR log level, and the session's first job, so the first key's
+  ``cold`` does not carry that one-off set-up;
 - ``measure`` — one cold run plus ``runs`` timed runs of a builder,
   consumed by ``consume``: an in-plan ``DataFrame.observe`` row count
   followed by a noop write, so the whole plan runs inside the JVM and
@@ -73,12 +74,15 @@ def classify(e: Exception) -> str:
 def open_session(app_name: str, sized_for: str):
     """The tools' session preamble. Returns ``(spark, sizing)`` where
     ``sizing`` is the self-describing harness config every record
-    carries (a number that moves with sizing must carry its sizing)."""
+    carries (a number that moves with sizing must carry its sizing).
+    The session's first job runs here: it costs about 3 s once per JVM,
+    which the first key's ``cold`` would otherwise carry."""
     load_all()
     sized_bytes = dir_bytes(sized_for)
     parts = shuffle_partitions_for_bytes(sized_bytes)
     spark = get_spark(app_name=app_name, shuffle_partitions=parts)
     spark.sparkContext.setLogLevel("ERROR")
+    spark.range(1).count()
     print(
         f"shuffle_partitions={parts} "
         f"(sized for {sized_for} = {sized_bytes / 1e6:.0f} MB)"
